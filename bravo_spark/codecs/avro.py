@@ -18,11 +18,10 @@ declaration order.
 Type surface: null, boolean, int, long, float, double, bytes, string,
 record, enum, array, map, union, fixed. Codecs: ``null``, ``deflate``
 (raw DEFLATE per spec), ``snappy`` (block snappy + 4-byte big-endian
-CRC32 of the UNcompressed payload, per spec), and — since r17 —
-``bzip2`` (stdlib bz2, one complete bzip2 stream per block), ``xz``
-(stdlib lzma, one .xz stream per block), and ``zstandard`` (one zstd
-frame per block, via codecs/fastpath: pyarrow's bundled libzstd with
-the pure RFC 8878 decoder as fallback) — each cross-validated both
+CRC32 of the UNcompressed payload, per spec), ``bzip2`` (stdlib bz2,
+one complete bzip2 stream per block), ``xz`` (stdlib lzma, one .xz
+stream per block), and ``zstandard`` (one zstd frame per block, via
+codecs/fastpath: pyarrow's bundled libzstd) — each cross-validated both
 directions against the real avro jar in ``tests/test_avro.py``. An
 unknown codec name still refuses BY NAME — never wrong bytes. All
 block decompressors are output-bounded (MAX_BLOCK_BYTES) so a crafted
@@ -364,7 +363,7 @@ def _matches(schema: Any, v: Any) -> bool:
 # container file
 # --------------------------------------------------------------------------
 
-_CODECS = ("null", "deflate", "snappy", "bzip2", "xz", "zstandard")
+_SUPPORTED_CODECS = ("null", "deflate", "snappy", "bzip2", "xz", "zstandard")
 
 
 def _bounded_obj_decompress(d, payload: bytes, pos: int, name: str) -> bytes:
@@ -423,7 +422,7 @@ def read_ocf(data: bytes) -> tuple[dict[str, Any], Iterator[dict[str, Any]]]:
         raise AvroError("container missing avro.schema metadata")
     schema = _norm_schema(schema, {})
     codec = _utf8(meta.get("avro.codec", b"null"), d.pos)
-    if codec not in _CODECS:
+    if codec not in _SUPPORTED_CODECS:
         raise AvroError(f"unsupported avro.codec {codec!r}")
     sync = d.raw(16)
 
@@ -527,11 +526,11 @@ def write_ocf(
     """Serialize records into an OCF byte string. The sync marker is
     derived from the schema (md5) so output is byte-deterministic.
     ``records`` is consumed LAZILY, one ``records_per_block`` block at a
-    time. r20: pass a binary file-like ``out`` to stream blocks straight
+    time. Pass a binary file-like ``out`` to stream blocks straight
     into it as they are encoded (returns None) — peak memory is then one
     block plus the encoder's buffers regardless of record count; with the
     default ``out=None`` the whole OCF is returned as bytes, unchanged."""
-    if codec not in _CODECS:
+    if codec not in _SUPPORTED_CODECS:
         raise AvroError(f"unsupported avro.codec {codec!r}")
     schema_json = schema if isinstance(schema, str) else json.dumps(schema)
     norm = _norm_schema(json.loads(schema_json), {})
@@ -584,15 +583,7 @@ def write_ocf(
         elif codec == "zstandard":
             from bravo_spark.codecs import fastpath
 
-            try:
-                payload = fastpath.zstd_compress(payload)
-            except ValueError as e:
-                # refusal-by-name contract: callers catch AvroError; the
-                # fastpath's bare ValueError (no zstd COMPRESSOR in a
-                # pyarrow-less environment — the pure codec only
-                # decodes) must surface as one
-                raise AvroError(
-                    f"cannot write zstandard codec: {e}") from e
+            payload = fastpath.zstd_compress(payload)
         hdr = _Encoder()
         hdr.long(len(batch))
         hdr.long(len(payload))

@@ -45,7 +45,7 @@ def crc32c_batch(blobs: list[bytes]) -> list[int]:
     sequential WITHIN a message, but independent messages advance in
     lockstep — so the batch axis vectorizes: one numpy table-gather per
     byte POSITION updates every still-active message. ~25-80x the scalar
-    loop at realistic SST block batches (measured in tools/bench_sst.py),
+    loop at realistic SST block batches (perfbench's sst.write_mb_s),
     which turns block-trailer checksumming from ~half of SST write cost
     into noise. Messages are sorted by length descending so finished rows
     simply retire off the active prefix; oversized outliers (see

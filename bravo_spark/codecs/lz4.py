@@ -1,18 +1,20 @@
-"""Pure-Python raw LZ4 block codec (lz4_Block_format.md).
+"""LZ4: the raw block format (lz4_Block_format.md) and lz4-java's
+``LZ4BlockOutputStream`` framing.
 
-Used for RocksDB SST blocks (kLZ4Compression / kLZ4HCCompression — HC
-changes only the encoder's match search, the block format is identical)
-and for lz4-java's LZ4BlockOutputStream framing in Spark state files.
-``compress_block`` is a greedy single-candidate encoder — spec-valid
-output any LZ4 decoder accepts, tuned for correctness not ratio; it
-exists so ``SstWriter`` can emit lz4 blocks for fixtures and bootstrap.
-Pure Python is fine here — state and SST blocks are tens of KB and the
-engine's hot data path (parquet, shuffle) never goes through this module.
+``encode_stream`` is the runtime writer of lz4-java framed Spark state
+files; codecs/fastpath.py runs it with liblz4 blocks. The pure block
+codec (``compress_block``, a greedy single-candidate encoder, and
+``decompress_block``) is the spec reference that tests compare liblz4
+against; the runtime never calls it. RocksDB's kLZ4Compression and
+kLZ4HCCompression share this block format (HC changes only the
+encoder's match search).
 """
 
 from __future__ import annotations
 
 import struct as _struct
+
+from bravo_spark.codecs.xxh import xxh32
 
 # spec end-of-block rules (lz4_Block_format.md): the last 5 bytes are
 # always literals, and the last match must start >= 12 bytes before the
@@ -85,49 +87,6 @@ def compress_block(src: bytes) -> bytes:
         anchor = i
     _emit(out, src[anchor:])
     return bytes(out)
-
-
-def xxh32(data: bytes, seed: int = 0) -> int:
-    """XXH32 — lz4-java's per-block checksum (LZ4BlockOutputStream uses
-    seed 0x9747b28c over the UNCOMPRESSED data)."""
-    P1, P2, P3, P4, P5 = (
-        2654435761, 2246822519, 3266489917, 668265263, 374761393)
-    M = 0xFFFFFFFF
-
-    def rotl(x, r):
-        return ((x << r) | (x >> (32 - r))) & M
-
-    n = len(data)
-    idx = 0
-    if n >= 16:
-        v1 = (seed + P1 + P2) & M
-        v2 = (seed + P2) & M
-        v3 = seed & M
-        v4 = (seed - P1) & M
-        while idx <= n - 16:
-            a, b, c, d = _struct.unpack_from("<IIII", data, idx)
-            v1 = (rotl((v1 + a * P2) & M, 13) * P1) & M
-            v2 = (rotl((v2 + b * P2) & M, 13) * P1) & M
-            v3 = (rotl((v3 + c * P2) & M, 13) * P1) & M
-            v4 = (rotl((v4 + d * P2) & M, 13) * P1) & M
-            idx += 16
-        h = (rotl(v1, 1) + rotl(v2, 7) + rotl(v3, 12) + rotl(v4, 18)) & M
-    else:
-        h = (seed + P5) & M
-    h = (h + n) & M
-    while idx <= n - 4:
-        (w,) = _struct.unpack_from("<I", data, idx)
-        h = (rotl((h + w * P3) & M, 17) * P4) & M
-        idx += 4
-    while idx < n:
-        h = (rotl((h + data[idx] * P5) & M, 11) * P1) & M
-        idx += 1
-    h ^= h >> 15
-    h = (h * P2) & M
-    h ^= h >> 13
-    h = (h * P3) & M
-    h ^= h >> 16
-    return h
 
 
 LZ4_BLOCK_MAGIC = b"LZ4Block"

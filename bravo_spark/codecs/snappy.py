@@ -1,25 +1,14 @@
-"""Pure-Python Snappy: raw block format + the official framing format.
+"""Snappy: the raw block format and the official framing format.
 
-Two consumers, neither of which can assume the ``python-snappy`` C binding
-(absent from this environment):
+The framing layout (stream identifier, chunk headers, masked CRC-32C of
+the uncompressed data) is the runtime one: codecs/fastpath.py runs
+``frame_compress`` / ``frame_decompress`` with libsnappy chunks for the
+savepoint sections. The pure raw-block ``compress`` / ``decompress`` are
+spec references that tests compare the native codec against; the
+runtime never calls them. The compressor emits literal-only output,
+valid Snappy any decoder accepts.
 
-- **raw blocks** — RocksDB compresses each SST block with raw Snappy by
-  default, so the incremental-checkpoint reader (sources/sst.py) must
-  decompress them (reference: the reader path behind
-  RocksDBCheckpointIterator.java:57-254 opens the DB, which decompresses
-  transparently).
-- **framed stream** — the per-key-group compression gate in
-  sources/savepoint.py (reference StateMetadataUtils.java:142-146,
-  RocksDBSavepointWriter.java:71-72 use Flink's snappy stream decorator,
-  which writes the framing format).
-
-Decompression implements the full format (literals + all three copy
-element kinds). Compression emits literal-only output — valid Snappy any
-decoder accepts, chosen for simplicity over ratio; the decompressor is the
-interoperability-critical half.
-
-Format: google/snappy format_description.txt and framing_format.txt
-(public). Framing CRCs are masked CRC-32C of the UNCOMPRESSED data.
+Format: google/snappy format_description.txt and framing_format.txt.
 """
 
 from __future__ import annotations
@@ -27,39 +16,14 @@ from __future__ import annotations
 import struct
 
 from bravo_spark.codecs import crc32c
-
-# --- varint (LEB128, unsigned) ---
-
-
-def _read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
-    result = shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("uvarint too long")
-
-
-def _write_uvarint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        if v < 0x80:
-            out.append(v)
-            return bytes(out)
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-
+from bravo_spark.codecs.varint import read_uvarint, write_uvarint
 
 # --- raw block format ---
 
 
 def decompress(buf: bytes) -> bytes:
     """Raw-Snappy decompress (format_description.txt §2-4)."""
-    n, pos = _read_uvarint(buf, 0)
+    n, pos = read_uvarint(buf, 0)
     out = bytearray()
     end = len(buf)
     while pos < end:
@@ -101,7 +65,7 @@ def decompress(buf: bytes) -> bytes:
 
 def compress(buf: bytes) -> bytes:
     """Literal-only raw Snappy (always valid; no back-references)."""
-    out = bytearray(_write_uvarint(len(buf)))
+    out = bytearray(write_uvarint(len(buf)))
     pos = 0
     while pos < len(buf):
         chunk = buf[pos : pos + 65536]
@@ -189,6 +153,9 @@ def frame_decompress(data: bytes, *, _decompress=None, _crc_batch=None) -> bytes
     while pos < len(data):
         ctype = data[pos]
         length = int.from_bytes(data[pos + 1 : pos + 4], "little")
+        if pos + 4 + length > len(data):
+            flush_pending()  # earlier CRC corruption outranks this
+            raise ValueError(f"truncated snappy frame chunk at offset {pos}")
         body = data[pos + 4 : pos + 4 + length]
         pos += 4 + length
         if ctype == 0xFF:  # stream identifier
@@ -197,6 +164,9 @@ def frame_decompress(data: bytes, *, _decompress=None, _crc_batch=None) -> bytes
                 raise ValueError("bad snappy stream identifier")
             continue
         if ctype in (_CHUNK_COMPRESSED, _CHUNK_UNCOMPRESSED):
+            if length < 4:
+                flush_pending()
+                raise ValueError("snappy frame chunk shorter than its CRC")
             (crc,) = struct.unpack("<I", body[:4])
             chunk = body[4:]
             if ctype == _CHUNK_COMPRESSED:

@@ -1,28 +1,18 @@
 """Pure-Python Zstandard frame decoder (RFC 8878).
 
-Completes the SST block-codec matrix: RocksDB's ``kZSTD`` (=7) blocks are a
-varint32 decompressed-size prefix followed by a standard zstd frame
-(``compression.h`` ``ZSTD_Compress`` writes the size info unconditionally —
-zstd postdates compress_format_version 2). The reference never parses this
-itself — it opens checkpoints with an embedded RocksDB which decompresses
-transparently (bravo's ``RocksDBCheckpointIterator.java:150-216``); we parse
-the format directly, so the decoder is cross-validated two ways in tests:
-against pyarrow's bundled libzstd on adversarial payloads, and against
-zstd-compressed SST files written by the real ``rocksdbjni``.
-
-Decode-only by design: the engine never needs to *produce* zstd (SstWriter
-emits snappy/lz4/zlib/bzip2, all of which RocksDB accepts), and a spec-valid
-FSE/Huffman *encoder* would triple this module for no capability gain.
+The runtime decodes zstd with libzstd (codecs/fastpath.py); from this
+module it uses only the header walk ``inspect_frame`` (WARC and Avro
+split and bomb-check frames with it) and the error types. The decoder
+is the spec reference that tests compare libzstd against, on
+adversarial payloads and on zstd-compressed SST files written by the
+real ``rocksdbjni``. RocksDB's ``kZSTD`` (=7) blocks are a varint32
+decompressed-size prefix followed by a standard zstd frame.
 
 Scope: single-segment and windowed frames, raw/RLE/compressed blocks,
 Huffman literals (direct + FSE-compressed weights, 1- and 4-stream),
 treeless repeats, all three sequence-table modes plus repeat, repeat-offset
 history, skippable frames, XXH64 content checksums. Dictionaries are
-rejected by ID (RocksDB only produces them when a compression dict is
-explicitly configured).
-
-Pure Python is fine here: SST blocks are tens of KB and the engine's hot
-data path (parquet, shuffle) never goes through this module.
+rejected by ID. Decode-only: zstd frames are written by libzstd.
 """
 
 from __future__ import annotations

@@ -12,11 +12,11 @@ computed AS A DATAFLOW, which is the shape that scales:
    properties block alone, before any data-block I/O.
 2. **One shuffle on (state_name, key_ns)** groups every version of a user
    key — across levels, across files.
-3. **JVM-side resolution** (builtin array expressions, no Python):
-   newest non-merge entry is the base (highest seq wins — LSM shadowing);
-   tombstones (type 0/7) delete; merge operands (type 2) newer than the
-   base concatenate onto it with the ','-delimiter of Flink's
-   StringAppendOperator (list state appends —
+3. **Streamed fold** (:func:`resolve_lsm`): versions sorted by
+   (key, seq) within each partition fold in Arrow-batch order — a put
+   replaces the value (highest seq wins — LSM shadowing), a tombstone
+   (type 0/7) deletes it, and a merge operand (type 2) appends with the
+   ','-delimiter of Flink's StringAppendOperator (list state appends —
    RocksDBCheckpointIterator.java:62-63 sets the same operator).
 
 The output is the universal state-row relation (state_name, key_ns, value)
@@ -32,7 +32,6 @@ from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from bravo_spark.sources import sst as sstmod
 
@@ -142,25 +141,6 @@ def _scan_ssts(
             )
 
 
-# LSM resolution over the per-key version array, entirely in builtin
-# expressions. ``es`` is collect_list(struct(seq, vtype, value)).
-_PARTS_SQL = """
-CASE WHEN _base IS NOT NULL AND _base.vtype = 1 THEN array(_base.value)
-     ELSE cast(array() AS array<binary>) END
-|| transform(
-     array_sort(filter(es, x -> x.vtype = 2
-                           AND (_barrier IS NULL OR x.seq > _barrier))),
-     x -> x.value)
-"""
-
-_VALUE_SQL = """
-CASE WHEN size(parts) = 0 THEN NULL
-     ELSE aggregate(slice(parts, 2, size(parts) - 1), element_at(parts, 1),
-                    (acc, x) -> concat(acc, X'2C', x))
-END
-"""
-
-
 def read_incremental_checkpoint(
     spark: SparkSession,
     ckpt_dir: str,
@@ -169,17 +149,11 @@ def read_incremental_checkpoint(
     state_names: list[str] | None = None,
     files: list[str] | None = None,
     verify_checksums: bool = False,
-    skew_safe: bool = True,
 ) -> DataFrame:
-    """Incremental checkpoint → universal state-row relation.
-    ``verify_checksums=True`` block-verifies every SST during the scan
-    (integrity audit; corrupt blocks fail the task loudly instead of
-    decoding garbage). LSM resolution defaults to the linear
-    :func:`resolve_lsm_streamed` fold (r15 — a merge-heavy key is safe by
-    DEFAULT, nobody has to remember a flag on the one checkpoint that has
-    one); ``skew_safe=False`` opts back into the JVM-side collect_list
-    fold, faster on uniformly tiny per-key version counts but per-key
-    QUADRATIC in merge-operand count — see :func:`resolve_lsm_collected`."""
+    """Incremental checkpoint → universal state-row relation, LSM-resolved
+    by :func:`resolve_lsm`. ``verify_checksums=True`` block-verifies every
+    SST during the scan (integrity audit; corrupt blocks fail the task
+    loudly instead of decoding garbage)."""
     if state_names is not None:
         selected = set(state_names)
         state_filter = lambda n: n in selected  # noqa: E731
@@ -195,10 +169,10 @@ def read_incremental_checkpoint(
         lambda it: _scan_ssts(it, state_filter, verify_checksums),
         schema=_RAW_SCHEMA,
     )
-    return resolve_lsm(raw, skew_safe=skew_safe)
+    return resolve_lsm(raw)
 
 
-def resolve_lsm(raw: DataFrame, *, skew_safe: bool = True) -> DataFrame:
+def resolve_lsm(raw: DataFrame) -> DataFrame:
     """LSM resolution over the raw per-version SST relation
     (state_name, key_ns, seq, vtype, value): newest-seq shadowing,
     tombstones, StringAppend merge-operand folding — one shuffle on
@@ -206,79 +180,20 @@ def resolve_lsm(raw: DataFrame, *, skew_safe: bool = True) -> DataFrame:
     the ``bravo_checkpoint`` DataSource front door
     (sources/datasource.py), whose scan yields the same raw relation.
 
-    Routes to the linear :func:`resolve_lsm_streamed` fold by DEFAULT
-    (r15): its time and per-key memory are linear in a key's version
-    count, so a checkpoint with one merge-heavy key (millions of
-    StringAppend operands) resolves safely without anyone remembering a
-    flag. ``skew_safe=False`` opts into :func:`resolve_lsm_collected`,
-    the JVM-side collect_list fold — marginally faster when every key's
-    version count is tiny, but per-key quadratic (measured: 14 s at 5k
-    operands, 189 s at 20k); equivalence between the two is
-    pytest-pinned to 100k operands."""
-    return resolve_lsm_streamed(raw) if skew_safe else resolve_lsm_collected(raw)
+    The versions are sorted within each partition by (key, seq) and
+    folded in Arrow-batch order: ascending seq means each non-merge entry
+    RESETS the fold (a put replaces the buffer, a tombstone clears it)
+    and each merge operand appends. Time is linear in a key's version
+    count and peak per-key memory is the folded value bytes, so a key
+    with millions of merge operands streams through ~10k-row batches.
 
-
-def resolve_lsm_collected(raw: DataFrame) -> DataFrame:
-    """The pre-r15 default: LSM resolution with ``collect_list`` + builtin
-    expressions, everything JVM-side.
-
-    PER-KEY BOUNDS: ``collect_list`` gathers every surviving version of a
-    key into ONE array row, so peak per-key memory is
-    O(sum of all version payloads + per-element struct overhead) — for a
-    pathological key that accumulated millions of merge operands this is
-    a single-row executor-memory bound (RocksDB itself degrades on such a
-    key, but it streams; this doesn't). Worse, the JVM concat fold over
-    that array recopies the accumulated buffer per operand, so time is
-    QUADRATIC in a key's merge-operand count (measured: 14 s at 5k
-    operands, 189 s at 20k). Both bounds are per-key, so the normal case
-    — bounded operand counts between compactions — is unaffected; that is
-    why this variant remains available behind ``skew_safe=False``."""
-    resolved = (
-        raw.groupBy("state_name", "key_ns")
-        .agg(F.collect_list(F.struct("seq", "vtype", "value")).alias("es"))
-        .withColumn(
-            "_barrier",
-            F.expr("array_max(transform(filter(es, x -> x.vtype != 2), x -> x.seq))"),
-        )
-        .withColumn(
-            "_base",
-            # try_element_at: ANSI-safe on the empty array when every
-            # version of the key is a merge operand (no base yet)
-            F.expr(
-                "try_element_at(filter(es, x -> x.vtype != 2 AND x.seq = _barrier), 1)"
-            ),
-        )
-        .withColumn("parts", F.expr(_PARTS_SQL))
-        .withColumn("value", F.expr(_VALUE_SQL))
-        .filter(F.col("value").isNotNull())
-        .select("state_name", "key_ns", "value")
-    )
-    return resolved
-
-
-def resolve_lsm_streamed(raw: DataFrame) -> DataFrame:
-    """The default LSM fold since r15: same shuffle on
-    (state_name, key_ns) as :func:`resolve_lsm_collected`, but instead of
-    ``collect_list`` the versions are sorted within each partition by
-    (key, seq) and folded in Arrow-batch order — ascending seq means each
-    non-merge entry simply RESETS the fold (a put replaces the buffer, a
-    tombstone clears it) and each merge operand appends, so peak per-key
-    memory is just the folded value bytes, never the full version array.
-    A key with millions of merge operands streams through ~10k-row
-    batches instead of materializing one giant array row. Output and
-    semantics are identical to ``resolve_lsm_collected`` (equivalence is
-    pytest-pinned, including the 100k-operand skew case).
-
-    r20 (guide §4): batches with NO merge operands — the overwhelmingly
-    common case for value state, every version a put or a tombstone —
-    resolve vectorized: ascending seq within a key means the LAST row of
-    each key group wins outright, so group boundaries come from one
-    shifted equality over the batch and the winners from a mask, no
-    per-row Python. A batch carrying any merge operand falls back to the
-    row fold; the cross-batch carry (``cur_key``/``buf``) is shared by
-    both paths, so keys spanning batch or path boundaries resolve
-    identically (pytest-pinned against the row fold, mixed batches
-    included)."""
+    Batches with NO merge operands — the common case for value state —
+    resolve vectorized: the LAST row of each key group wins outright, so
+    group boundaries come from one shifted equality over the batch and
+    the winners from a mask. A batch carrying any merge operand takes
+    the row fold; both paths share the cross-batch carry
+    (``cur_key``/``buf``), so keys spanning batch or path boundaries
+    resolve identically."""
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np

@@ -227,8 +227,8 @@ class SavepointWriter(DataSourceArrowWriter):
         import os
         import uuid as _uuid
 
+        from bravo_spark.codecs import fastpath
         from bravo_spark.codecs import flink as fc
-        from bravo_spark.sources.savepoint import _frame_compress
 
         prefix = fc.key_group_prefix_bytes(self.max_parallelism)
         mask = 0x7F if prefix == 1 else 0x7FFF
@@ -271,7 +271,7 @@ class SavepointWriter(DataSourceArrowWriter):
                     offsets[kg] = f.tell()
                     buf = fc.write_key_group_section(entries)
                     if self.compression:
-                        buf = _frame_compress(buf)
+                        buf = fastpath.frame_compress(buf)
                     f.write(buf)
             files.append(
                 {"path": fpath, "op_index": op,
@@ -387,10 +387,7 @@ class CheckpointDataSource(DataSource):
     contract. Yields the RAW per-version relation (state_name, key_ns,
     seq, vtype, value): apply :func:`bravo_spark.sources.checkpoint.
     resolve_lsm` on top for the merged view, exactly as
-    ``read_incremental_checkpoint`` does — which since r15 defaults to
-    the linear streamed fold (merge-heavy keys are safe by default;
-    ``resolve_lsm(raw, skew_safe=False)`` opts back into the JVM
-    collect_list fold).
+    ``read_incremental_checkpoint`` does.
 
     ``state_name`` EqualTo/In predicates reach ``pushFilters`` and become
     COLUMN-FAMILY pruning: each SST names its column family in its
@@ -420,8 +417,9 @@ class CheckpointScanReader(_StateNamePushdownReader):
 
     def __init__(self, options):
         super().__init__(options)
-        # integrity-audit mode (r13 functional-API option, plumbed through
-        # the format front door): verify every block trailer before decode
+        # integrity-audit mode (the functional API's option, plumbed
+        # through the format front door): verify every block trailer
+        # before decode
         self.verify_checksums = (
             str(options.get("verify_checksums", "false")).lower() == "true"
         )

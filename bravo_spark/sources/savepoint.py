@@ -24,9 +24,9 @@ Mirrors the reference's savepoint lifecycle (SURVEY.md §2.1 S2/S3/S7/S8,
   (RocksDBSavepointIterator.java:178-191 semantics, implemented in
   codecs.flink.iter_key_group_section).
 
-At 100 TB: files scale with parallelism × state volume; reads scale with
-#splits = #files × #keygroup-chunks, so a 1000-executor cluster gets full
-parallelism regardless of the snapshot's original subtask count.
+Files scale with parallelism × state volume; reads scale with #splits =
+#files × #keygroup-chunks, so read parallelism does not depend on the
+snapshot's original subtask count.
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bravo_spark.codecs import fastpath
 from bravo_spark.codecs import flink as fc
 from bravo_spark.sources.staterows import (
     STATE_ROW_SCHEMA,
@@ -50,35 +51,6 @@ from bravo_spark.sources.staterows import (
 )
 
 METADATA_FILE = "_bravo_metadata"
-
-
-def _frame_compress(buf: bytes) -> bytes:
-    """Per-key-group Snappy compression (StateMetadataUtils.java:142-146 /
-    RocksDBSavepointWriter.java:71-72 analog): sections are framed-Snappy
-    streams. Dispatch order: the python-snappy C binding if installed,
-    else codecs/fastpath.py (pyarrow's libsnappy chunks + numpy-batched
-    chunk CRCs inside our framing writer), else the pure-Python codec —
-    same wire format all three ways (pinned against org.xerial framed
-    streams in tests/test_snappy.py)."""
-    try:
-        import snappy  # type: ignore
-
-        return snappy.StreamCompressor().compress(buf)
-    except ImportError:
-        from bravo_spark.codecs import fastpath
-
-        return fastpath.frame_compress(buf)
-
-
-def _frame_decompress(buf: bytes) -> bytes:
-    try:
-        import snappy  # type: ignore
-
-        return snappy.StreamDecompressor().decompress(buf)
-    except ImportError:
-        from bravo_spark.codecs import fastpath
-
-        return fastpath.frame_decompress(buf)
 
 
 @dataclass
@@ -149,9 +121,8 @@ def write_savepoint(
     sid_map = F.create_map(*[x for k, v in ids.items() for x in (F.lit(k), F.lit(v))])
     # a caller-supplied state_ids mapping is validated EXECUTOR-side via a
     # -1 sentinel (checked per section below), not by a driver-side
-    # distinct() — that pre-check re-ran the entire upstream pipeline (a
-    # second full pass over the state relation at 100 TB) just to name
-    # missing states before the real one
+    # distinct(), which would re-run the entire upstream pipeline just to
+    # name missing states
     routed = routed.withColumn(
         "state_id",
         F.coalesce(sid_map[F.col("state_name")].cast("int"), F.lit(-1)),
@@ -180,7 +151,7 @@ def write_savepoint(
                 offsets[state["kg"]] = state["fh"].tell()
                 buf = fc.write_key_group_section(entries)
                 if compression:
-                    buf = _frame_compress(buf)
+                    buf = fastpath.frame_compress(buf)
                 state["fh"].write(buf)
             entries.clear()
 
@@ -319,8 +290,8 @@ def _plan_scan(path, state_names, state_filter, splits_per_file=None):
         if splits_per_file is None:
             # adaptive: tiny files → one task (job-overhead floor dominates
             # below ~tens of MB); huge files → one task per TARGET bytes,
-            # not a fixed 8 — at 100 TB the per-file fan-out must grow with
-            # the file, and key groups are the only safe cut points.
+            # not a fixed 8 — the per-file fan-out must grow with the
+            # file, and key groups are the only safe cut points.
             n = max(1, min(-(-total // TARGET_SPLIT_BYTES), len(spans)))
         else:
             n = max(1, min(splits_per_file, len(spans)))
@@ -365,7 +336,7 @@ def iter_file_spans(fpath, spans, id_to_name, state_filter, compressed=False):
             f.seek(off)
             buf = f.read(end - off)
             if compressed:
-                buf = _frame_decompress(buf)
+                buf = fastpath.frame_decompress(buf)
             yield from fc.iter_key_group_section(buf, id_to_name, state_filter)
 
 

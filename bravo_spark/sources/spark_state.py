@@ -12,18 +12,18 @@ against Structured Streaming checkpoints.
 On-disk format (sql/execution/streaming/state/HDFSBackedStateStoreProvider):
 
 - each file is a compression stream (``spark.sql.streaming.stateStore.
-  compression.codec``): lz4-java block framing (default) or xerial-snappy
-  framing — both implemented here in pure Python, read AND write (the
-  lz4-java framing incl. its 28-bit XXH32 block checksums is bit-exact to
-  the real library; rewrites sniff the original file and keep its codec,
-  since a restarted query decompresses with its session-configured codec,
-  not by sniffing);
+  compression.codec``): lz4-java block framing (default), xerial-snappy
+  framing or zstd frames — the framings are implemented here, read AND
+  write, around the native block codecs (the lz4-java framing incl. its
+  28-bit XXH32 block checksums is bit-exact to the real library; rewrites
+  sniff the original file and keep its codec, since a restarted query
+  decompresses with its session-configured codec, not by sniffing);
 - inside: records ``[keyLen int BE][key][valueLen int BE][value]``,
   valueLen -1 = tombstone (delta files only), keyLen -1 = EOF;
 - key/value bytes are UnsafeRow: 8-byte null-bit header word(s), 8-byte
   slots per field, var-length fields appended 8-byte-aligned with
   (offset << 32 | size) in the slot — including NESTED array/map/struct
-  regions and decimals (r13), so applyInPandasWithState /
+  regions and decimals, so applyInPandasWithState /
   flatMapGroupsWithState state (stored as a struct value column wrapping
   the user state schema) reads and rewrites like any aggregation state;
 - state at version N = greatest snapshot ≤ N + deltas up to N (we replay
@@ -72,44 +72,61 @@ _SUPPORTED = (T.LongType, T.IntegerType, T.DoubleType, T.FloatType,
 # ---------------------------------------------------------------------------
 
 
-_lz4_block_decompress = fastpath.lz4_decompress_block  # shared raw-block decoder
-
-
 def decode_stream(raw: bytes) -> bytes:
-    """Un-frame a state file: xerial-snappy or lz4-java block stream."""
+    """Un-frame a state file: xerial-snappy, lz4-java block or zstd
+    stream. A stream cut short raises ``ValueError``; only xerial
+    framing, which has no end marker, can end at any block boundary."""
     if raw[:8] == SNAPPY_MAGIC:
+        if len(raw) < 16:
+            raise ValueError("truncated xerial-snappy header")
         pos, out = 16, bytearray()  # skip magic + version + compat ints
         while pos < len(raw):
+            if pos + 4 > len(raw):
+                raise ValueError(f"truncated xerial-snappy block header at offset {pos}")
             (blen,) = struct.unpack(">I", raw[pos : pos + 4])
             pos += 4
+            if pos + blen > len(raw):
+                raise ValueError(f"truncated xerial-snappy block at offset {pos}")
             out += fastpath.snappy_decompress(raw[pos : pos + blen])
             pos += blen
         return bytes(out)
     if raw[:8] == LZ4_MAGIC:
         # lz4-java LZ4BlockOutputStream: EVERY block repeats the 8-byte
-        # magic, then token, compressedLen, originalLen, checksum (LE ints)
+        # magic, then token, compressedLen, originalLen, checksum (LE
+        # ints); an empty block ends the stream. The header checks are
+        # LZ4BlockInputStream's, so both readers refuse the same streams.
         pos, out = 0, bytearray()
-        while pos + 21 <= len(raw):
+        while True:
+            if pos + 21 > len(raw):
+                raise ValueError(f"lz4-java stream ends at offset {pos} without its end block")
             if raw[pos : pos + 8] != LZ4_MAGIC:
                 raise ValueError(f"bad LZ4Block magic at offset {pos}")
             token = raw[pos + 8]
-            clen, dlen, _cksum = struct.unpack("<iii", raw[pos + 9 : pos + 21])
+            method = token & 0xF0
+            clen, dlen, cksum = struct.unpack("<iii", raw[pos + 9 : pos + 21])
+            if (
+                method not in (0x10, 0x20)
+                or not 0 <= dlen <= 1 << (10 + (token & 0x0F))
+                or clen < 0
+                or (dlen == 0) != (clen == 0)
+                or (method == 0x10 and clen != dlen)
+            ):
+                raise ValueError(f"corrupt LZ4Block header at offset {pos}")
             pos += 21
             if dlen == 0:
-                break
+                if cksum:
+                    raise ValueError(f"corrupt LZ4Block end block at offset {pos - 21}")
+                return bytes(out)
+            if pos + clen > len(raw):
+                raise ValueError(f"truncated LZ4Block at offset {pos}")
             payload = raw[pos : pos + clen]
             pos += clen
-            method = token & 0xF0
             if method == 0x10:  # stored raw
                 out += payload
-            elif method == 0x20:
-                out += _lz4_block_decompress(payload, dlen)
             else:
-                raise ValueError(f"unknown LZ4Block method 0x{method:02x}")
-        return bytes(out)
+                out += fastpath.lz4_decompress_block(payload, dlen)
     if raw[:4] == ZSTD_FRAME_MAGIC:
-        # content size is absent from streaming-written frame headers, so
-        # this takes the stream decoder (native via pyarrow, else pure)
+        # content size is absent from streaming-written frame headers
         return fastpath.zstd_decompress_stream(raw)
     raise ValueError(
         "unrecognized state-file framing (supported: xerial snappy, "
@@ -138,13 +155,6 @@ def encode_stream_like(original: bytes | None, payload: bytes) -> bytes:
     if original is not None and original[:8] == SNAPPY_MAGIC:
         return encode_stream_snappy(payload)
     if original is not None and original[:4] == ZSTD_FRAME_MAGIC:
-        if not fastpath.available:
-            raise ValueError(
-                "cannot rewrite a zstd-compressed state file: the pure "
-                "zstd codec is decode-only and pyarrow (whose libzstd "
-                "provides the encoder) is unavailable; rerun the query "
-                "with codec lz4 or snappy to make its state rewritable"
-            )
         # Spark's ZSTDCompressionCodec reads any standard frame
         return fastpath.zstd_compress(payload)
     return fastpath.lz4_java_encode_stream(payload)

@@ -2,8 +2,8 @@
 strictness, and CROSS-VALIDATION against the real avro-1.12.1.jar that
 ships in Spark's JVM — files we write are read by real Avro, files real
 Avro writes are read by us, across ALL SIX spec codecs
-(null/deflate/snappy/bzip2/xz/zstandard — the last three closed the r16
-named-refusal residual in r17) and the full supported type surface (the
+(null/deflate/snappy/bzip2/xz/zstandard) and the full supported type
+surface (the
 same both-directions discipline as the SST/rocksdbjni and Snappy/xerial
 pins).
 """
@@ -389,25 +389,8 @@ def test_hypothesis_random_records_roundtrip_all_codecs():
     check()
 
 
-def test_write_zstandard_without_compressor_raises_avro_error(monkeypatch):
-    """write_ocf(codec='zstandard') in a pyarrow-less environment must
-    surface the missing-compressor refusal AS AN AvroError (r17 ADVICE):
-    callers catching AvroError rely on the module's refusal-by-name
-    contract, and the fastpath's bare ValueError escapes that catch."""
-    from bravo_spark.codecs import fastpath
-
-    def _no_compressor(payload):
-        raise ValueError("no zstd compressor in this environment")
-
-    monkeypatch.setattr(fastpath, "zstd_compress", _no_compressor)
-    schema = {"type": "record", "name": "R",
-              "fields": [{"name": "x", "type": "long"}]}
-    with pytest.raises(AvroError, match="zstandard"):
-        write_ocf(schema, [{"x": 1}], codec="zstandard")
-
-
 def test_write_ocf_streaming_sink_identical_bytes():
-    """r20: write_ocf with a file-like ``out`` must stream the exact
+    """write_ocf with a file-like ``out`` must stream the exact
     bytes the buffered form returns (block boundaries, sync markers,
     codec framing all identical) and return None."""
     import io

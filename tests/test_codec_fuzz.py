@@ -1,15 +1,21 @@
-"""Hypothesis roundtrip fuzz for the r16 container codecs (WARC, Avro
-OCF, EXIF): arbitrary payloads/values must survive write→read exactly,
-and random corruption must raise the codec's named error — never return
-wrong data silently.
+"""Hypothesis roundtrip fuzz for the container codecs (WARC, Avro OCF,
+EXIF) and the runtime block codecs (snappy, lz4, zstd and the Spark
+state-file framings): arbitrary payloads/values must survive write→read
+exactly, and truncation or corruption must raise the codec's named
+error — never return wrong data silently.
 """
 
 from __future__ import annotations
 
+import struct
+
 from hypothesis import given, settings, strategies as st
 
+from bravo_spark.codecs import fastpath
 from bravo_spark.codecs.avro import AvroError, read_ocf, write_ocf
+from bravo_spark.codecs.varint import read_uvarint, write_uvarint
 from bravo_spark.codecs.warc import WarcError, parse_warc, write_warc
+from bravo_spark.sources import spark_state as ss
 
 _HDR_VAL = st.text(
     alphabet=st.characters(min_codepoint=33, max_codepoint=126), min_size=1,
@@ -180,7 +186,7 @@ def test_exif_roundtrip_fuzz(orientation, lat, lon, with_gps, order):
 @settings(max_examples=120, deadline=None)
 def test_dechunk_roundtrip_fuzz_mixed_line_endings(body, cuts, crlf_bits):
     """Any chunking of any body, framed with an arbitrary PER-LINE mix
-    of CRLF and bare-LF terminators (the r19 CR-less-server tolerance),
+    of CRLF and bare-LF terminators (the CR-less-server tolerance),
     dechunks back to the body exactly."""
     from bravo_spark.codecs.http import dechunk
 
@@ -198,3 +204,116 @@ def test_dechunk_roundtrip_fuzz_mixed_line_endings(body, cuts, crlf_bits):
         b"%x" % len(c) + term() + c + term() for c in chunks
     ) + b"0" + term() + term()
     assert dechunk(enc) == body
+
+
+# --- runtime codec entry points -------------------------------------------
+# Each property: the round trip returns the input; every truncation
+# raises a ValueError subclass and never another exception type (or, for
+# a framing without an end marker, returns a chunk-aligned prefix); a
+# wrong declared length always raises. Bit flips inside unchecksummed raw
+# blocks are out of scope: they decode to different bytes by design.
+
+# mixes incompressible bytes with repetitive ones, so the encoders emit
+# both stored and compressed blocks
+_PAYLOAD = st.one_of(
+    st.binary(max_size=3000),
+    st.builds(
+        lambda unit, n: unit * n,
+        st.binary(min_size=1, max_size=40),
+        st.integers(min_value=1, max_value=2500),
+    ),
+)
+_CUT = st.floats(min_value=0, max_value=1, exclude_max=True)
+_DELTA = st.integers(min_value=-64, max_value=64).filter(bool)
+
+
+def _refused(fn, *args) -> None:
+    try:
+        fn(*args)
+    except ValueError:
+        return
+    raise AssertionError("corrupt input decoded without an error")
+
+
+@settings(max_examples=80, deadline=None)
+@given(data=_PAYLOAD, cut=_CUT, delta=_DELTA)
+def test_snappy_block_truncation_and_length(data, cut, delta):
+    stream = fastpath.snappy_compress(data)
+    assert fastpath.snappy_decompress(stream) == data
+    _refused(fastpath.snappy_decompress, stream[: int(cut * len(stream))])
+    n, pos = read_uvarint(stream, 0)
+    if n + delta >= 0:
+        _refused(fastpath.snappy_decompress, write_uvarint(n + delta) + stream[pos:])
+
+
+@settings(max_examples=60, deadline=None)
+@given(data=_PAYLOAD, cut=_CUT, delta=_DELTA)
+def test_snappy_frame_truncation_and_length(data, cut, delta):
+    framed = fastpath.frame_compress(data)
+    assert fastpath.frame_decompress(framed) == data
+    try:
+        got = fastpath.frame_decompress(framed[: int(cut * len(framed))])
+    except ValueError:
+        pass
+    else:  # the framing has no end marker: a whole-chunk prefix is legal
+        assert len(got) % 65536 == 0 and got == data[: len(got)]
+    if data:  # first data chunk's 3-byte length, after the stream identifier
+        length = int.from_bytes(framed[11:14], "little") + delta
+        if length >= 0:
+            _refused(fastpath.frame_decompress, framed[:11] + length.to_bytes(3, "little") + framed[14:])
+
+
+@settings(max_examples=80, deadline=None)
+@given(data=_PAYLOAD, cut=_CUT, delta=_DELTA)
+def test_lz4_block_truncation_and_length(data, cut, delta):
+    block = fastpath.lz4_compress_block(data)
+    assert fastpath.lz4_decompress_block(block, len(data)) == data
+    _refused(fastpath.lz4_decompress_block, block[: int(cut * len(block))], len(data))
+    if len(data) + delta >= 0:
+        _refused(fastpath.lz4_decompress_block, block, len(data) + delta)
+
+
+@settings(max_examples=60, deadline=None)
+@given(data=_PAYLOAD, cut=_CUT, delta=_DELTA)
+def test_zstd_truncation_and_length(data, cut, delta):
+    frame = fastpath.zstd_compress(data)
+    assert fastpath.zstd_decompress(frame, len(data)) == data
+    _refused(fastpath.zstd_decompress, frame[: int(cut * len(frame))], len(data))
+    if len(data) + delta >= 0:
+        _refused(fastpath.zstd_decompress, frame, len(data) + delta)
+
+
+@settings(max_examples=80, deadline=None)
+@given(data=_PAYLOAD, cut=_CUT, delta=_DELTA, block=st.sampled_from([1024, 4096]))
+def test_lz4_java_state_stream_truncation_and_length(data, cut, delta, block):
+    stream = fastpath.lz4_java_encode_stream(data, block_size=block)
+    assert ss.decode_stream(stream) == data
+    # no prefix is legal: the stream must end with its empty end block
+    _refused(ss.decode_stream, stream[: int(cut * len(stream))])
+    (dlen,) = struct.unpack("<i", stream[13:17])  # first block's originalLen
+    _refused(ss.decode_stream, stream[:13] + struct.pack("<i", dlen + delta) + stream[17:])
+
+
+@settings(max_examples=60, deadline=None)
+@given(data=_PAYLOAD, cut=_CUT, delta=_DELTA)
+def test_xerial_state_stream_truncation_and_length(data, cut, delta):
+    stream = ss.encode_stream_snappy(data, block_size=1024)
+    assert ss.decode_stream(stream) == data
+    try:
+        got = ss.decode_stream(stream[: int(cut * len(stream))])
+    except ValueError:
+        pass
+    else:  # xerial framing has no end marker: a whole-block prefix is legal
+        assert len(got) % 1024 == 0 and got == data[: len(got)]
+    if data:  # first block's big-endian length, after the 16-byte header
+        (blen,) = struct.unpack(">I", stream[16:20])
+        if blen + delta >= 0:
+            _refused(ss.decode_stream, stream[:16] + struct.pack(">I", blen + delta) + stream[20:])
+
+
+@settings(max_examples=40, deadline=None)
+@given(data=_PAYLOAD, cut=_CUT)
+def test_zstd_state_stream_truncation(data, cut):
+    stream = fastpath.zstd_compress(data)
+    assert ss.decode_stream(stream) == data
+    _refused(ss.decode_stream, stream[: int(cut * len(stream))])

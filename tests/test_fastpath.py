@@ -1,9 +1,7 @@
-"""codecs/fastpath.py — native (pyarrow) codec fast paths must be
+"""codecs/fastpath.py — the runtime (pyarrow) codecs must be
 format-identical to the pure-Python spec implementations: every stream one
 side writes, the other decodes, and the framing layers produce streams the
-pure parser accepts bit-for-bit at the layout level. pyarrow is baked into
-this environment, so the fast branch is the one actually exercised; the
-pure-fallback branch is covered by forcing ``_CODECS = None``."""
+pure parser accepts bit-for-bit at the layout level."""
 
 from __future__ import annotations
 
@@ -21,12 +19,6 @@ DATA = [
     bytes(range(256)) * 128,
     b"\x00" * 70000,  # multi-chunk for the framing layer
 ]
-
-
-def test_fastpath_is_active_in_this_environment():
-    # the container bakes pyarrow in; if this ever trips, the hot paths
-    # silently degraded to pure Python — worth failing loudly
-    assert fastpath.available
 
 
 @pytest.mark.parametrize("data", DATA, ids=range(len(DATA)))
@@ -105,32 +97,40 @@ def test_corruption_raises_valueerror():
         fastpath.lz4_decompress_block(lf[: max(1, len(lf) // 2)], 300)
 
 
-def test_pure_fallback_branch(monkeypatch):
-    """With the native codecs masked off, every entry point must fall
-    back to the pure implementations (zstd_compress raises by contract —
-    the pure codec is decode-only)."""
-    monkeypatch.setattr(fastpath, "_CODECS", None)
-    data = b"fallback " * 1000
-    assert psnappy.decompress(fastpath.snappy_compress(data)) == data
-    assert fastpath.snappy_decompress(psnappy.compress(data)) == data
-    assert (
-        plz4.decompress_block(fastpath.lz4_compress_block(data), len(data))
-        == data
-    )
-    import pyarrow as pa
+def test_lz4_block_length_must_match():
+    """liblz4 reports the decoded length but pyarrow drops it: a block
+    that decodes to fewer than the declared bytes must raise, not come
+    back zero-padded to the declared length."""
+    data = b"state payload " * 300
+    block = fastpath.lz4_compress_block(data)
+    assert fastpath.lz4_decompress_block(block, len(data)) == data
+    for dlen in (len(data) + 1, len(data) + 16, len(data) - 1, 0):
+        with pytest.raises(ValueError, match="corrupt lz4 block"):
+            fastpath.lz4_decompress_block(block, dlen)
+    empty = fastpath.lz4_compress_block(b"")
+    assert fastpath.lz4_decompress_block(empty, 0) == b""
+    with pytest.raises(ValueError):
+        fastpath.lz4_decompress_block(empty, 1)
 
-    native_frame = bytes(pa.Codec("zstd").compress(data))
-    assert fastpath.zstd_decompress(native_frame, len(data)) == data
-    assert fastpath.zstd_decompress_stream(native_frame) == data
-    assert psnappy.frame_decompress(fastpath.frame_compress(data)) == data
-    assert fastpath.frame_decompress(psnappy.frame_compress(data)) == data
-    with pytest.raises(ValueError, match="decode-only"):
-        fastpath.zstd_compress(data)
+
+@pytest.mark.parametrize("stream", [b"", b"\x80", b"\xff\xff"], ids=["empty", "cut1", "cut2"])
+def test_truncated_snappy_preamble_raises_valueerror(stream):
+    with pytest.raises(ValueError, match="truncated uvarint"):
+        fastpath.snappy_decompress(stream)
+
+
+def test_truncated_snappy_frame_raises_valueerror():
+    framed = fastpath.frame_compress(b"section bytes " * 10_000)
+    for cut in (3, 11, 12, 14, 20, len(framed) - 1):
+        with pytest.raises(ValueError):
+            fastpath.frame_decompress(framed[:cut])
+        with pytest.raises(ValueError):
+            psnappy.frame_decompress(framed[:cut])
 
 
 def test_sst_zstd_write_roundtrip(tmp_path):
-    """SstWriter zstd blocks (fastpath-only capability) round-trip through
-    our reader with checksums verified."""
+    """SstWriter zstd blocks (libzstd-encoded) round-trip through our
+    reader with checksums verified."""
     import struct
 
     from bravo_spark.sources import sst as sstmod
@@ -198,61 +198,3 @@ try:
 
 except ImportError:  # hypothesis is baked into this container; belt+braces
     pass
-
-
-def test_stream_bound_holds_on_pure_path(monkeypatch):
-    """zstd_decompress_stream's max_bytes must bound the PURE fallback
-    too (r17 ADVICE): with pyarrow masked off, a no-Frame_Content_Size
-    bomb frame — the shape the WARC/Avro declared-size pre-checks can't
-    see — refuses at the ceiling instead of materializing the output."""
-    import pyarrow as pa
-
-    from bravo_spark.codecs import zstd as pz
-
-    data = b"bomb " * 40_000
-    buf = pa.BufferOutputStream()
-    with pa.CompressedOutputStream(buf, "zstd") as s:
-        s.write(data)
-    frame = bytes(buf.getvalue())
-    assert pz.inspect_frame(frame)[2] is None  # no declared content size
-    monkeypatch.setattr(fastpath, "_CODECS", None)
-    with pytest.raises(ValueError, match="inflates past"):
-        fastpath.zstd_decompress_stream(frame, max_bytes=4096)
-    assert fastpath.zstd_decompress_stream(
-        frame, max_bytes=len(data)) == data
-
-
-def test_corrupt_frame_not_mislabeled_as_bomb(monkeypatch):
-    """Review finding: the pure decoder's corruption errors whose text
-    contains 'exceeds' ('sequence literal length exceeds literals') must
-    surface as corruption, not be remapped to the bomb refusal."""
-    import pyarrow as pa
-
-    from bravo_spark.codecs import zstd as pz
-
-    monkeypatch.setattr(fastpath, "_CODECS", None)
-    data = b"corrupt me " * 400
-    buf = pa.BufferOutputStream()
-    with pa.CompressedOutputStream(buf, "zstd") as s:
-        s.write(data)
-    frame = bytearray(buf.getvalue())
-    # flip bytes until the decode fails somewhere (any corruption error
-    # must keep its own message; only the bound refusal remaps)
-    seen = None
-    for i in range(12, len(frame)):
-        cand = bytes(frame[:i]) + bytes([frame[i] ^ 0xFF]) + bytes(frame[i+1:])
-        try:
-            pz.decompress(cand)
-        except pz.ZstdError as e:
-            seen = (cand, str(e))
-            break
-    assert seen is not None
-    cand, msg = seen
-    try:
-        fastpath.zstd_decompress_stream(cand, max_bytes=1 << 20)
-        raised = None
-    except ValueError as e:
-        raised = str(e)
-    assert raised is not None
-    assert "inflates past" not in raised or msg.startswith(
-        "decoded output exceeds")

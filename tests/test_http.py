@@ -303,7 +303,7 @@ except ImportError:  # hypothesis is baked in; belt+braces
 
 
 def test_review_findings_r18():
-    """Regression pins for the r18 self-review findings on this codec."""
+    """Regression pins for earlier findings on this codec."""
     import zlib
 
     from bravo_spark.codecs.http import decode_content_encoding
@@ -383,7 +383,7 @@ def test_extract_http_html_null_payload_quarantines(spark):
 
 
 # ---------------------------------------------------------------------------
-# r19: zstd Content-Encoding + real-crawl head/framing tolerances
+# zstd Content-Encoding + real-crawl head/framing tolerances
 # ---------------------------------------------------------------------------
 
 
@@ -567,8 +567,8 @@ def test_chunked_sniff_review_findings_r19():
 
 def test_zstd_bound_is_a_type(monkeypatch):
     """Bomb-vs-corruption classification is by exception TYPE
-    (ZstdBoundError), not message prose — both fastpath paths raise it
-    and http.py maps it to the named bomb refusal."""
+    (ZstdBoundError), not message prose — fastpath raises it and
+    http.py maps it to the named bomb refusal."""
     from bravo_spark.codecs import fastpath
     from bravo_spark.codecs import http as h
     from bravo_spark.codecs.zstd import ZstdBoundError

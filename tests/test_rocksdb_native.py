@@ -200,15 +200,9 @@ def test_native_xpress_block_raises_named_error(jvm, tmp_path):
 
 def test_our_writer_accepted_by_native_reader(jvm, tmp_path):
     """SstWriter output iterates cleanly under real RocksDB with checksum
-    verification on — the write side of the format contract. lz4 and zstd
-    blocks come from the codecs/fastpath.py native encoders (zstd write
-    exists only through it)."""
-    from bravo_spark.codecs import fastpath
-
-    codecs = [("plain", 0), ("snappy", 1), ("lz4", 4)]
-    if fastpath.available:
-        codecs.append(("zstd", 7))
-    for codec, codec_id in codecs:
+    verification on — the write side of the format contract. Compressed
+    blocks come from the codecs/fastpath.py native encoders."""
+    for codec, codec_id in [("plain", 0), ("snappy", 1), ("lz4", 4), ("zstd", 7)]:
         path = str(tmp_path / f"ours_{codec}.sst")
         w = sstmod.SstWriter(path, compression=codec_id)
         entries = _entries(300)
@@ -269,7 +263,7 @@ def test_live_rocksdb_flush_seqnos_and_tombstones(jvm, tmp_path):
 
 
 def test_our_writer_checksum_types_verified_by_native_reader(jvm, tmp_path):
-    """SstWriter's checksum_type option (r13): files we declare as
+    """SstWriter's checksum_type option: files we declare as
     kCRC32c / kxxHash / kxxHash64 / kXXH3 must pass REAL RocksDB's
     verifyChecksum() and iterate identically — the write-side twin of
     test_native_checksum_types_verified. (RocksDB reads honor the

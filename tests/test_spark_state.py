@@ -58,7 +58,7 @@ def test_unsafe_row_nulls_and_empty_string():
 
 
 def test_schema_guard_rejects_unsupported_leaf():
-    # nested array/map/struct/decimal are supported (r13); the guard now
+    # nested array/map/struct/decimal are supported; the guard
     # rejects only leaves the codec has no layout for, however deeply
     # they're nested — validation once at the API boundary, not per row
     ok = T.StructType([
@@ -224,15 +224,16 @@ def test_lz4_block_roundtrip_against_reference_vectors():
     """Format vectors for the PURE block decoder (codecs/lz4.py). The
     second vector is deliberately lenient-only: its final sequence ends
     in a match, which the LZ4 spec forbids for well-formed blocks and
-    liblz4 (the fastpath decoder behind ss._lz4_block_decompress)
-    rejects — real compressors never emit it, so the production path
-    only needs spec-conforming blocks (covered by test_fastpath's
-    cross-decoding) plus the strict literals-only vector below."""
+    liblz4 (the runtime decoder, codecs/fastpath.py) rejects — real
+    compressors never emit it, so the production path only needs
+    spec-conforming blocks (covered by test_fastpath's cross-decoding)
+    plus the strict literals-only vector below."""
+    from bravo_spark.codecs import fastpath
     from bravo_spark.codecs import lz4 as plz4
 
     # literals-only block: token 0x30, 3 literal bytes — spec-strict,
     # both decoders accept it
-    assert ss._lz4_block_decompress(b"\x30abc", 3) == b"abc"
+    assert fastpath.lz4_decompress_block(b"\x30abc", 3) == b"abc"
     assert plz4.decompress_block(b"\x30abc", 3) == b"abc"
     # overlap copy (RLE): literal 'a' then match offset 1 len 8 -> 'a'*9
     blk = b"\x14a\x01\x00\x00"
@@ -272,6 +273,66 @@ def test_lz4_java_framing_write_cross_validated(spark):
             los.write(bytearray(p))
         los.close()
         assert ss.decode_stream(bytes(bos.toByteArray())) == p
+
+
+def _java_lz4_read(jvm, stream: bytes) -> bytes:
+    bis = jvm.java.io.ByteArrayInputStream(bytearray(stream))
+    return bytes(jvm.net.jpountz.lz4.LZ4BlockInputStream(bis).readAllBytes())
+
+
+def test_lz4_java_missing_end_block_refused_like_real_reader(spark):
+    """A stream that stops without its empty end block — cut mid-block
+    or exactly at a block boundary — is refused by the real
+    LZ4BlockInputStream, so decode_stream must refuse it too instead of
+    returning a silent prefix."""
+    from py4j.protocol import Py4JJavaError
+
+    from bravo_spark.codecs import fastpath
+
+    j = spark._jvm
+    payload = bytes(range(256)) * 40 + b"state row " * 3000
+    stream = fastpath.lz4_java_encode_stream(payload, block_size=8192)
+    assert _java_lz4_read(j, stream) == payload == ss.decode_stream(stream)
+    heads, pos = [], 0
+    while pos < len(stream):
+        heads.append(pos)
+        pos += 21 + struct.unpack("<i", stream[pos + 9 : pos + 13])[0]
+    assert len(heads) > 3  # several data blocks + the end block
+    # every block boundary (the last one drops just the end block), a cut
+    # inside a block and a cut inside the end block
+    for cut in heads[1:] + [heads[1] + 30, len(stream) - 5]:
+        with pytest.raises(Py4JJavaError):
+            _java_lz4_read(j, stream[:cut])
+        with pytest.raises(ValueError, match="end block|truncated"):
+            ss.decode_stream(stream[:cut])
+
+
+def test_lz4_java_overstated_block_length_refused_like_real_reader(spark):
+    """A block header whose originalLen overstates the payload is refused
+    by the real reader; decode_stream must not return the block padded
+    with zeros to the declared length."""
+    from py4j.protocol import Py4JJavaError
+
+    from bravo_spark.codecs import fastpath
+
+    j = spark._jvm
+    payload = b"count=7;" * 550 + b"tail"  # one lz4-compressed block
+    stream = bytearray(fastpath.lz4_java_encode_stream(payload))
+    assert stream[8] & 0xF0 == 0x20
+    (dlen,) = struct.unpack("<i", stream[13:17])
+    assert dlen == len(payload)
+    stream[13:17] = struct.pack("<i", dlen + 16)
+    with pytest.raises(Py4JJavaError):
+        _java_lz4_read(j, bytes(stream))
+    with pytest.raises(ValueError, match="corrupt lz4 block"):
+        ss.decode_stream(bytes(stream))
+
+
+def test_xerial_truncated_block_header_raises_valueerror():
+    stream = ss.encode_stream_snappy(b"state " * 1000, block_size=1024)
+    for cut in (10, 18, 16 + 4 + 3):
+        with pytest.raises(ValueError, match="truncated"):
+            ss.decode_stream(stream[:cut])
 
 
 def test_zstd_state_stream_decode_cross_validated(spark):
@@ -556,7 +617,7 @@ def test_schema_file_structural_parse_v1_v2_chunked():
     assert (k, v) == (_KEY_SCHEMA, _VAL_SCHEMA)
     with pytest.raises(ValueError, match="version tag"):
         ss._parse_schema_file(utf("garbage") + utf(kj) + utf(vj))
-    # nested struct types parse structurally AND pass the guard (the r13
+    # nested struct types parse structurally AND pass the guard (the
     # codec handles them); an unsupported LEAF inside still fails loudly
     nested = T.StructType([T.StructField("s", T.StructType([T.StructField("x", T.LongType())]))])
     nj = json.dumps(nested.jsonValue())
@@ -1348,7 +1409,7 @@ def test_wide_array_multiword_null_bits(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r13 regressions: timestamp exactness, wide-decimal byte identity,
+# Regressions: timestamp exactness, wide-decimal byte identity,
 # map-key hashability, duplicate map keys, zstd rewrite-restart
 # ---------------------------------------------------------------------------
 
@@ -2116,7 +2177,7 @@ def test_read_streaming_progress(spark, tmp_path):
 
 def test_read_streaming_progress_numeric_batch_order(spark, tmp_path):
     """Offset-log files must sort NUMERICALLY: lexicographic ordering puts
-    batch 10 before batch 2 once a query passes 9 batches (r15 advice).
+    batch 10 before batch 2 once a query passes 9 batches.
     Synthesized 12-batch log — a real 12-batch streaming run would take
     minutes for the same pin."""
     import os
@@ -2779,7 +2840,7 @@ def test_latest_version_skips_torn_inflight_version(spark, tmp_path):
 
 
 def test_latest_version_names_missing_named_store(tmp_path):
-    """The HDFS-provider twin of the RocksDB contract (r16 advice):
+    """The HDFS-provider twin of the RocksDB contract:
     latest_version on a store-name typo must raise an error NAMING the
     store and the partitions missing it — not an opaque listdir
     FileNotFoundError — and a partition legitimately missing a named
@@ -2798,7 +2859,7 @@ def test_latest_version_names_missing_named_store(tmp_path):
 
 def test_prune_skips_partition_missing_named_store(spark, tmp_path):
     """prune_spark_checkpoint over a named store must skip a partition
-    that lacks the store subdirectory (r16 advice) — crashing mid-prune
+    that lacks the store subdirectory — crashing mid-prune
     after some files were already deleted leaves the checkpoint worse
     than either outcome."""
     inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
@@ -2831,7 +2892,7 @@ def test_prune_skips_partition_missing_named_store(spark, tmp_path):
 
 
 def test_audit_sidecar_crc_mismatch_and_log_gap(spark, tmp_path):
-    """The two r16 audit classes, defect-injection tested like the
+    """The two newer audit classes, defect-injection tested like the
     original five: a state file whose ChecksumCheckpointFileManager
     sidecar disagrees with its content (the restart-killing defect a
     MISSING-sidecar check can't see), and an interior hole in the
@@ -2939,7 +3000,7 @@ def test_repair_sidecars_fixes_audit_findings(spark, tmp_path):
 
 
 def test_stream_state_partitions_derivation(spark, monkeypatch):
-    """r20: the default state-partition count derives from the SESSION's
+    """The default state-partition count derives from the SESSION's
     defaultParallelism (not the bench-harness SPARK_GRAFT_CPUS env), the
     BRAVO_STREAM_STATE_PARTITIONS override is guarded (malformed falls
     back to the derivation, non-positive clamps to 1), and the prior

@@ -680,7 +680,7 @@ def test_reader_refuses_or_survives_corruption(tmp_path):
 
 
 def test_writer_property_fuzz_roundtrip():
-    """WRITER fuzz (r8): arbitrary entry sets — binary keys incl. 0xFF and
+    """WRITER fuzz: arbitrary entry sets — binary keys incl. 0xFF and
     shared prefixes, empty values, delete/value/merge/single-delete types,
     multiple seqs per key — across every block size × codec × index type
     combination must re-read EXACTLY through the checksum-verifying
@@ -815,10 +815,34 @@ def test_checkpoint_scan_verify_checksums(tmp_path, spark):
         ).count()
 
 
+def _reference_fold(rows) -> list[tuple[str, bytes, bytes]]:
+    """Plain-Python LSM resolution of raw (state_name, key_ns, seq, vtype,
+    value) versions: sorted by (key, seq), a put resets the value, a
+    merge operand appends b"," + operand, a tombstone clears it."""
+    live: dict[tuple[str, bytes], list[bytes] | None] = {}
+    for name, key_ns, _seq, vtype, value in sorted(rows, key=lambda r: (r[0], bytes(r[1]), r[2])):
+        k = (name, bytes(key_ns))
+        if vtype == sst.TYPE_VALUE:
+            live[k] = [bytes(value)]
+        elif vtype == sst.TYPE_MERGE:
+            if live.get(k) is None:
+                live[k] = []
+            live[k].append(bytes(value))
+        else:
+            live[k] = None
+    return sorted((n, k, b",".join(v)) for (n, k), v in live.items() if v is not None)
+
+
+def _resolved(df) -> list[tuple[str, bytes, bytes]]:
+    return sorted(
+        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"])) for r in df.collect()
+    )
+
+
 def test_resolve_lsm_streamed_equivalence(spark, tmp_path):
-    """The skew-safe sort-fold variant must produce the exact relation the
-    collect_list formulation does — across puts, shadowing, tombstones,
-    merge-only keys, and merges both before and after the base."""
+    """The streamed sort-fold must produce the relation the reference fold
+    does — across puts, shadowing, tombstones, merge-only keys, and merges
+    both before and after the base."""
     d = str(tmp_path / "ckpt_eq")
     ck.write_sst_fixture(
         d,
@@ -846,61 +870,20 @@ def test_resolve_lsm_streamed_equivalence(spark, tmp_path):
     raw = frame.mapInPandas(
         lambda it: ck._scan_ssts(it, lambda _n: True, False), schema=ck._RAW_SCHEMA
     )
-    want = sorted(
-        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-        for r in ck.resolve_lsm_collected(raw).collect()
-    )
-    got = sorted(
-        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-        for r in ck.resolve_lsm_streamed(raw).collect()
-    )
-    assert got == want
-    assert len(got) == 2  # key 2 tombstoned
-    # the DEFAULT front door (no flag) routes to the streamed fold since
-    # r15 — and still produces the identical relation
-    front = sorted(
-        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-        for r in ck.read_incremental_checkpoint(spark, d).collect()
-    )
-    assert front == want
-    # and the opt-out routes to the collected fold, same relation
-    legacy = sorted(
-        (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-        for r in ck.read_incremental_checkpoint(
-            spark, d, skew_safe=False
-        ).collect()
-    )
-    assert legacy == want
-
-
-def test_resolve_lsm_default_is_streamed(spark):
-    """The r15 default flip, pinned at the plan level: resolve_lsm with no
-    flag must route to the streamed fold (MapInPandas, no collect_list
-    aggregate); skew_safe=False must route to the JVM collect_list fold."""
-    raw = spark.createDataFrame(
-        [("s", b"\x00k", 1, sst.TYPE_VALUE, b"v")], schema=ck._RAW_SCHEMA
-    )
-    default_plan = ck.resolve_lsm(raw)._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in default_plan
-    assert "collect_list" not in default_plan
-    legacy_plan = (
-        ck.resolve_lsm(raw, skew_safe=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "collect_list" in legacy_plan
-    assert "MapInPandas" not in legacy_plan
+    want = _reference_fold(tuple(r) for r in raw.collect())
+    assert want == sorted([
+        ("s", _kns(1), b"new,tail"),
+        ("s", _kns(3), b"m0,m1"),
+    ])  # key 2 tombstoned
+    assert _resolved(ck.resolve_lsm(raw)) == want
+    # the front door resolves through the same fold
+    assert _resolved(ck.read_incremental_checkpoint(spark, d)) == want
 
 
 def test_resolve_lsm_streamed_skewed_key_100k_operands(spark):
     """The documented resolve_lsm bound: one key accumulating 100k merge
-    operands. The streamed variant folds it in Arrow-batch order (peak
-    per-key memory = folded value bytes, linear time); the collect_list
-    formulation is QUADRATIC in operand count on such a key (each JVM
-    concat step recopies the accumulated buffer — measured 14s at 5k,
-    189s at 20k operands), so the 100k case runs streamed-only against a
-    Python-computed expectation and the byte-for-byte cross-check against
-    the collected fold runs at 2k where the quadratic path is still
-    cheap."""
+    operands folds in Arrow-batch order (peak per-key memory = folded
+    value bytes, linear time)."""
     n = 100_000
     rows = [("s", b"\x00hot", 1, sst.TYPE_VALUE, b"base")] + [
         ("s", b"\x00hot", 2 + i, sst.TYPE_MERGE, str(i).encode()) for i in range(n)
@@ -908,35 +891,20 @@ def test_resolve_lsm_streamed_skewed_key_100k_operands(spark):
     # a second, normal key proves the fold doesn't bleed state across keys
     rows.append(("s", b"\x00cold", 5, sst.TYPE_VALUE, b"v"))
     raw = spark.createDataFrame(rows, schema=ck._RAW_SCHEMA)
-    got = {
-        bytes(r["key_ns"]): bytes(r["value"])
-        for r in ck.resolve_lsm_streamed(raw).collect()
-    }
-    expect = b"base," + b",".join(str(i).encode() for i in range(n))
-    assert got[b"\x00hot"] == expect
-    assert got[b"\x00cold"] == b"v"
-
-    # byte-for-byte equivalence vs the collect_list formulation, at a
-    # size where its quadratic fold is still fast
-    small = spark.createDataFrame(rows[:2001] + rows[-1:], schema=ck._RAW_SCHEMA)
-    want = {
-        bytes(r["key_ns"]): bytes(r["value"])
-        for r in ck.resolve_lsm_collected(small).collect()
-    }
-    got_small = {
-        bytes(r["key_ns"]): bytes(r["value"])
-        for r in ck.resolve_lsm_streamed(small).collect()
-    }
-    assert got_small == want
+    got = _resolved(ck.resolve_lsm(raw))
+    assert got == _reference_fold(rows)
+    assert dict((k, v) for _, k, v in got)[b"\x00hot"] == b"base," + b",".join(
+        str(i).encode() for i in range(n)
+    )
 
 
 def test_resolve_lsm_fold_equivalence_fuzz(spark):
     """Property fuzz over random LSM version graphs: for ANY multiset of
     (key, seq, vtype) versions — puts, StringAppend merges, tombstones,
     single-deletes, duplicate seqs across keys, merge-before-base,
-    merge-only keys — the streamed sort-fold and the collect_list fold
-    produce the identical resolved relation. Seeded RNG (no
-    Date/random-in-worker), one Spark round per case batch."""
+    merge-only keys — resolve_lsm and the reference fold produce the
+    identical resolved relation. Seeded RNG (no Date/random-in-worker),
+    one Spark round per case batch."""
     import random
 
     rng = random.Random(48151623)
@@ -956,23 +924,15 @@ def test_resolve_lsm_fold_equivalence_fuzz(spark):
             rows.append(("s", b"\x00" + k, seq, vtype, val))
             seq += rng.randint(1, 3)
         raw = spark.createDataFrame(rows, schema=ck._RAW_SCHEMA)
-        collected = sorted(
-            (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-            for r in ck.resolve_lsm_collected(raw).collect()
-        )
-        streamed = sorted(
-            (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-            for r in ck.resolve_lsm_streamed(raw).collect()
-        )
-        assert streamed == collected, f"case {case}: {rows}"
+        assert _resolved(ck.resolve_lsm(raw)) == _reference_fold(rows), f"case {case}: {rows}"
 
 
 def test_resolve_lsm_streamed_vectorized_batch_boundaries(spark):
-    """r20: the streamed fold's vectorized no-merge fast path must match
-    the collect_list fold exactly when key groups span Arrow batch
-    boundaries and when merge-carrying batches (row-fold path) interleave
-    with merge-free ones (vectorized path). Forced with a tiny
-    maxRecordsPerBatch so every boundary case actually occurs."""
+    """The fold's vectorized no-merge fast path must match the reference
+    fold exactly when key groups span Arrow batch boundaries and when
+    merge-carrying batches (row-fold path) interleave with merge-free
+    ones (vectorized path). Forced with a tiny maxRecordsPerBatch so
+    every boundary case actually occurs."""
     rows = []
     # 40 keys x 3 versions: put, shadowing put, and for every 4th key a
     # tombstone on top; keys 37..39 additionally carry merge operands so
@@ -990,20 +950,13 @@ def test_resolve_lsm_streamed_vectorized_batch_boundaries(spark):
     old = spark.conf.get(key, None)
     spark.conf.set(key, "7")  # groups of 2-4 rows straddle every batch
     try:
-        want = sorted(
-            (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-            for r in ck.resolve_lsm_collected(raw).collect()
-        )
-        got = sorted(
-            (r["state_name"], bytes(r["key_ns"]), bytes(r["value"]))
-            for r in ck.resolve_lsm_streamed(raw).collect()
-        )
+        got = _resolved(ck.resolve_lsm(raw))
     finally:
         if old is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
-    assert got == want
+    assert got == _reference_fold(rows)
     # sanity on the semantics themselves: tombstoned keys absent unless a
     # newer merge re-created them; shadowing keeps only v2
     d = {k: v for _, k, v in got}
