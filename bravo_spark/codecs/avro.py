@@ -280,6 +280,10 @@ class _Encoder:
                     return
             raise AvroError(f"value {v!r} matches no union branch {schema!r}")
         t = schema if isinstance(schema, str) else schema["type"]
+        if v is None and t != "null":
+            # without this a NULL would encode as "None", False or an
+            # empty array instead of refusing
+            raise AvroError(f"NULL value for non-nullable Avro type {t!r}")
         if t == "null":
             if v is not None:
                 raise AvroError(f"null schema got {v!r}")
@@ -525,19 +529,34 @@ def write_ocf(
 ) -> bytes | None:
     """Serialize records into an OCF byte string. The sync marker is
     derived from the schema (md5) so output is byte-deterministic.
-    ``records`` is consumed LAZILY, one ``records_per_block`` block at a
-    time. Pass a binary file-like ``out`` to stream blocks straight
-    into it as they are encoded (returns None) — peak memory is then one
-    block plus the encoder's buffers regardless of record count; with the
-    default ``out=None`` the whole OCF is returned as bytes, unchanged."""
+    Pass a binary file-like ``out`` to stream blocks straight into it as
+    they are encoded (returns None); with the default ``out=None`` the
+    whole OCF is returned as bytes."""
+    chunks = iter_ocf(schema, records, codec=codec,
+                      records_per_block=records_per_block)
+    if out is None:
+        return b"".join(chunks)
+    for chunk in chunks:
+        out.write(chunk)
+    return None
+
+
+def iter_ocf(
+    schema: dict[str, Any] | str,
+    records: Iterable[dict[str, Any]],
+    *,
+    codec: str = "deflate",
+    records_per_block: int = 1000,
+) -> Iterator[bytes]:
+    """:func:`write_ocf` as a stream: yields the header, then each
+    encoded block with its sync marker. ``records`` is consumed lazily,
+    so peak memory is one block plus the encoder's buffers regardless
+    of record count."""
     if codec not in _SUPPORTED_CODECS:
         raise AvroError(f"unsupported avro.codec {codec!r}")
     schema_json = schema if isinstance(schema, str) else json.dumps(schema)
     norm = _norm_schema(json.loads(schema_json), {})
     sync = hashlib.md5(b"bravo-avro:" + schema_json.encode()).digest()
-    sink = out
-    out = io.BytesIO() if sink is None else sink
-    out.write(MAGIC)
     meta = _Encoder()
     meta.long(2)
     for k, v in (
@@ -550,14 +569,11 @@ def write_ocf(
         meta.long(len(v))
         meta.out.write(v)
     meta.long(0)
-    out.write(meta.out.getvalue())
-    out.write(sync)
+    yield MAGIC + meta.out.getvalue() + sync
 
     batch: list[dict[str, Any]] = []
 
-    def flush() -> None:
-        if not batch:
-            return
+    def block() -> bytes:
         enc = _Encoder()
         for r in batch:
             enc.value(norm, r)
@@ -587,14 +603,12 @@ def write_ocf(
         hdr = _Encoder()
         hdr.long(len(batch))
         hdr.long(len(payload))
-        out.write(hdr.out.getvalue())
-        out.write(payload)
-        out.write(sync)
         batch.clear()
+        return hdr.out.getvalue() + payload + sync
 
     for r in records:
         batch.append(r)
         if len(batch) >= records_per_block:
-            flush()
-    flush()
-    return None if sink is not None else out.getvalue()
+            yield block()
+    if batch:
+        yield block()

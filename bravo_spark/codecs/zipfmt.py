@@ -261,17 +261,20 @@ def _read_member(data: bytes, name: str, flags: int, method: int,
         raise ZipError(f"member {name!r}: local header past archive end")
     if data[loc_off:loc_off + 4] != _LOC_SIG:
         raise ZipError(f"member {name!r}: bad local-header signature")
+    (loc_flags,) = struct.unpack_from("<H", data, loc_off + 6)
     (loc_name_len, loc_extra_len) = struct.unpack_from(
         "<HH", data, loc_off + 26)
-    loc_name = data[loc_off + 30:loc_off + 30 + loc_name_len]
     # the directory is authoritative for sizes/CRC (flag bit 3 zeroes
     # the local copies), but the NAME must agree — a mismatch means the
-    # offsets point into the wrong member (overlap/tamper)
-    if _dec_name(loc_name, flags) != name:
+    # offsets point into the wrong member (overlap/tamper). Each copy is
+    # decoded under its OWN flags (stdlib zipfile's rule), so a flipped
+    # UTF-8 bit in either header cannot return a silently re-decoded name
+    loc_name = _dec_name(data[loc_off + 30:loc_off + 30 + loc_name_len],
+                         loc_flags)
+    if loc_name != name:
         raise ZipError(
-            f"member {name!r}: local header names "
-            f"{_dec_name(loc_name, flags)!r} — directory offsets are "
-            "inconsistent")
+            f"member {name!r}: local header names {loc_name!r} — "
+            "directory offsets are inconsistent")
     start = loc_off + 30 + loc_name_len + loc_extra_len
     body = data[start:start + csize]
     if len(body) != csize:
@@ -326,6 +329,15 @@ def write_zip(entries: Iterable[tuple[str, bytes]], *,
     (training text compresses; the default) or ``"stored"``
     (byte-transparent). Refuses by name on empty/duplicate names and on
     anything that would need zip64."""
+    return b"".join(iter_write_zip(entries, method=method, level=level))
+
+
+def iter_write_zip(entries: Iterable[tuple[str, bytes]], *,
+                   method: str = "deflate",
+                   level: int = 6) -> Iterator[bytes]:
+    """:func:`write_zip` as a stream: yields each member's local header
+    and body as it is encoded, then the central directory and end
+    record, so only the directory entries are held."""
     if method == "deflate":
         m = _DEFLATED
     elif method == "stored":
@@ -333,7 +345,6 @@ def write_zip(entries: Iterable[tuple[str, bytes]], *,
     else:
         raise ZipError(f"unsupported write method {method!r} "
                        "(stored/deflate)")
-    locals_: list[bytes] = []
     centrals: list[bytes] = []
     offset = 0
     seen: set[str] = set()
@@ -374,18 +385,17 @@ def write_zip(entries: Iterable[tuple[str, bytes]], *,
         crc = zlib.crc32(data)
         common = struct.pack("<HHHHIII", _FLAG_UTF8, m, _DOS_TIME,
                              _DOS_DATE, crc, csize, usize)
-        locals_.append(_LOC_SIG + struct.pack("<H", 20) + common
-                       + struct.pack("<HH", len(raw_name), 0)
-                       + raw_name + body)
+        local = (_LOC_SIG + struct.pack("<H", 20) + common
+                 + struct.pack("<HH", len(raw_name), 0) + raw_name + body)
         centrals.append(_CEN_SIG + struct.pack("<HH", 20, 20) + common
                         + struct.pack("<HHHHHII", len(raw_name), 0, 0,
                                       0, 0, 0, offset) + raw_name)
-        offset += len(locals_[-1])
+        offset += len(local)
         if offset >= _MAX_U32:
             raise ZipError("archive exceeds 4 GiB — zip64 territory; "
                            "repartition the writer's input")
+        yield local
     n = len(centrals)
     cd = b"".join(centrals)
-    eocd = _EOCD_SIG + struct.pack("<HHHHIIH", 0, 0, n, n, len(cd),
-                                   offset, 0)
-    return b"".join(locals_) + cd + eocd
+    yield cd + _EOCD_SIG + struct.pack("<HHHHIIH", 0, 0, n, n, len(cd),
+                                       offset, 0)

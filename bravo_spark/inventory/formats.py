@@ -389,12 +389,12 @@ _WARC_INGEST_ORACLE = (
 
 def _warc_fixture(spark, sf_dir) -> str:
     """Write-once-per-process WET-style archive fixture: each
-    ``documents`` partition packed into ONE .warc.gz (executor-side —
-    never a driver loop), completeness-marked. Shared by the batch and
-    streaming ingest rows so both drive the same archives."""
+    ``documents`` partition packed into ONE .warc.gz by the library
+    writer, completeness-marked. Shared by the batch and streaming
+    ingest rows so both drive the same archives."""
     import hashlib
 
-    from bravo_spark.codecs.warc import write_warc
+    from bravo_spark.sources.warc_source import write_warc_shards
 
     # 8 shards: read-parallel at archive grain (the fixture scan is one
     # split, which packed EVERYTHING into a single archive read by one
@@ -408,30 +408,13 @@ def _warc_fixture(spark, sf_dir) -> str:
     marker = os.path.join(out, "_SUCCESS")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-
-        def _write(pid, rows):
-            recs = [
-                (
-                    {
-                        "WARC-Type": "conversion",
-                        "WARC-Target-URI": f"doc://{r.doc_id}",
-                        "WARC-Date": "2026-01-01T00:00:00Z",
-                    },
-                    r.text.encode("utf-8"),
-                )
-                for r in rows
-            ]
-            if recs:
-                with open(os.path.join(out, f"shard_{pid:05d}.warc.gz"),
-                          "wb") as f:
-                    f.write(write_warc(recs))
-            return iter(())
-
-        # fixture-only RDD use: partition-indexed shard names need
-        # mapPartitionsWithIndex; production archives arrive on shared
-        # storage, they are not written by this query
-        docs.rdd.mapPartitionsWithIndex(_write).count()
+        write_warc_shards(
+            docs.select(
+                F.concat(F.lit("doc://"), F.col("doc_id")).alias("uri"),
+                F.col("text").alias("payload"),
+            ),
+            out,
+        )
         open(marker, "w").close()
     return out
 
@@ -447,17 +430,15 @@ def warc_ingest(spark, sf_dir):
     byte length and md5 must equal the source text's UTF-8 bytes.
 
     The fixture packs each ``documents`` partition into ONE archive
-    (executor-side foreachPartition — never a driver loop), mirroring
-    real WET shards (~thousands of records per .warc.gz).
+    (the library's ``write_warc_shards``), mirroring real WET shards
+    (~thousands of records per .warc.gz).
 
     Scale shape: archive-grain parallelism — one task per WARC file
     (binaryFile never splits inside a file, which matches gzip-member
     reality); at 100 TB the levers are shard size at WRITE time (keep
     archives ~1 GiB), ``pathGlobFilter`` pruning, and
     ``maxPartitionBytes`` packing of small shards. The parse is
-    mapInPandas (Arrow batches of whole archives), zero shuffles; the
-    same LOCAL-MODE fixture caveat as binary_file_ingest applies to the
-    write half only (production archives live on shared storage)."""
+    mapInPandas (Arrow batches of whole archives), zero shuffles."""
     out = _warc_fixture(spark, sf_dir)
 
     # read half: the library source (sources/warc_source.py) — ONE
@@ -652,10 +633,20 @@ def _http_response_bytes(doc_id: int, text: str) -> bytes:
 def _warc_response_fixture(spark, sf_dir) -> str:
     """Write-once-per-process raw-crawl fixture: each ``documents``
     partition packed into ONE .warc.gz of ``WARC-Type: response``
-    records (executor-side — never a driver loop)."""
+    records by the library writer."""
     import hashlib
 
-    from bravo_spark.codecs.warc import write_warc
+    from bravo_spark.sources.warc_source import write_warc_shards
+
+    def _captures(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame({
+                "uri": [f"doc://{d}" for d in pdf["doc_id"]],
+                "payload": [_http_response_bytes(int(d), t)
+                            for d, t in zip(pdf["doc_id"], pdf["text"])],
+            })
 
     # 8 shards, same rationale as _warc_fixture
     docs = (catalog.table(spark, sf_dir, "documents")
@@ -665,28 +656,13 @@ def _warc_response_fixture(spark, sf_dir) -> str:
     marker = os.path.join(out, "_SUCCESS")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-
-        def _write(pid, rows):
-            recs = [
-                (
-                    {
-                        "WARC-Type": "response",
-                        "WARC-Target-URI": f"doc://{r.doc_id}",
-                        "WARC-Date": "2026-01-01T00:00:00Z",
-                        "Content-Type": "application/http; msgtype=response",
-                    },
-                    _http_response_bytes(int(r.doc_id), r.text),
-                )
-                for r in rows
-            ]
-            if recs:
-                with open(os.path.join(out, f"shard_{pid:05d}.warc.gz"),
-                          "wb") as f:
-                    f.write(write_warc(recs))
-            return iter(())
-
-        docs.rdd.mapPartitionsWithIndex(_write).count()
+        write_warc_shards(
+            docs.mapInPandas(_captures, "uri string, payload binary"),
+            out,
+            warc_type="response",
+            extra_headers={
+                "Content-Type": "application/http; msgtype=response"},
+        )
         open(marker, "w").close()
     return out
 
@@ -803,39 +779,21 @@ _TFRECORD_ORACLE = (
 
 def _tfrecord_fixture(spark, sf_dir) -> str:
     """Write-once-per-process TFRecord shard fixture: each ``documents``
-    partition packed into ONE .tfrecord of Example records
-    (executor-side — never a driver loop), completeness-marked."""
+    partition packed into ONE .tfrecord of Example records by the
+    library encoder and writer, completeness-marked."""
     import hashlib
 
-    docs = catalog.table(spark, sf_dir, "documents").select("doc_id", "text")
+    from bravo_spark.sources import tfrecord_source as tfs
+
+    docs = catalog.table(spark, sf_dir, "documents").select(
+        "doc_id", "text", F.octet_length("text").alias("n_bytes"))
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     out = scratch_path(f"tfrec_{tag}")
     marker = os.path.join(out, "_SUCCESS")
     if not os.path.exists(marker):
         shutil.rmtree(out, ignore_errors=True)
-        os.makedirs(out, exist_ok=True)
-
-        def _write(pid, rows):
-            from bravo_spark.codecs.tfrecord import (
-                encode_example,
-                write_tfrecords,
-            )
-
-            recs = [
-                encode_example({
-                    "doc_id": int(r.doc_id),
-                    "text": r.text.encode("utf-8"),
-                    "n_bytes": len(r.text.encode("utf-8")),
-                })
-                for r in rows
-            ]
-            if recs:
-                with open(os.path.join(out, f"shard_{pid:05d}.tfrecord"),
-                          "wb") as f:
-                    f.write(write_tfrecords(recs))
-            return iter(())
-
-        docs.rdd.mapPartitionsWithIndex(_write).count()
+        tfs.write_tfrecord_shards(
+            tfs.encode_examples(docs, ["doc_id", "text", "n_bytes"]), out)
         open(marker, "w").close()
     return out
 

@@ -14,8 +14,9 @@ no timestamps — same shards, same manifest). ``verify_shards``
 re-scans and refuses by name listing every missing / extra / changed
 shard. The digest pass is DISTRIBUTED (binaryFile scan + JVM md5, one
 row per shard collected — shard count is partition count, driver-safe
-by construction); the sidecar goes through pyarrow.fs so the manifest
-lands next to the shards on object storage too.
+by construction); the sidecar is committed like a shard
+(``sources/shards.py``), so it lands next to the shards on object
+storage too and never appears half-written.
 
 The leading underscore keeps the sidecar invisible to Spark's file
 listing (the same convention as ``_SUCCESS``), so data readers over
@@ -25,11 +26,12 @@ the directory never see it.
 from __future__ import annotations
 
 import json
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from bravo_spark.sources.warc_source import _resolve_fs
+from bravo_spark.sources.shards import _resolve_fs, commit_file
 
 MANIFEST_NAME = "_MANIFEST.json"
 
@@ -75,9 +77,8 @@ def write_shard_manifest(
     fs, base = _resolve_fs(path)
     blob = json.dumps(manifest, sort_keys=True,
                       separators=(",", ":")).encode("utf-8")
-    with fs.open_output_stream(
-            base.rstrip("/") + "/" + MANIFEST_NAME, compression=None) as f:
-        f.write(blob)
+    commit_file(fs, base.rstrip("/") + "/" + MANIFEST_NAME, [blob],
+                uuid.uuid4().hex)
     return manifest
 
 

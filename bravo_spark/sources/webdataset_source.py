@@ -25,20 +25,21 @@ adds on top:
   must contain; a missing part refuses by name — silent schema drift
   is how a training run ingests garbage).
 
-Shard IO goes through pyarrow.fs (``_resolve_fs``) so executor tasks
-reach object storage, and shard count is controlled the Spark way
-(``repartition(n)`` upstream).
+Shard IO goes through ``sources/shards.py`` (atomic per-shard commit,
+plain paths or filesystem URIs), and shard count is controlled the
+Spark way (``repartition(n)`` upstream).
 """
 
 from __future__ import annotations
 
 import io
 import tarfile
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bravo_spark.sources.warc_source import _resolve_fs
+from bravo_spark.sources.shards import drain, read_shards, write_shards
 
 
 class WebDatasetError(ValueError):
@@ -76,54 +77,93 @@ def write_webdataset_shards(
         *[F.col(c).alias(f"p{i}") for i, c in enumerate(
             sorted(part_cols, key=lambda c: part_cols[c]))],
     )
-    n_parts = len(part_cols)
+    max_ext = max(len(e) for e in exts)
 
-    def _write(pid, rows):
-        count = 0
+    def encode(rows):
         buf = io.BytesIO()
         tar = tarfile.open(fileobj=buf, mode="w",
                            format=tarfile.USTAR_FORMAT)
         for r in rows:
-            if not r.key:
+            key = r["key"]
+            if not key:
                 raise WebDatasetError("NULL/empty sample key")
-            if "." in r.key or "/" in r.key:
+            if "." in key or "/" in key:
                 # the reader's grouping rules (basename, key up to the
                 # FIRST dot) would silently mutate such a key on the way
                 # back — 'v1.2' reads as key 'v1', 'logs/0001' as
                 # '0001' — so the writer refuses it by name
                 raise WebDatasetError(
-                    f"sample key {r.key!r} contains '.' or '/' — the "
+                    f"sample key {key!r} contains '.' or '/' — the "
                     "WebDataset key grammar cannot round-trip it")
-            if len(r.key) + 1 + max(len(e) for e in exts) > 100:
+            if len(key) + 1 + max_ext > 100:
                 raise WebDatasetError(
-                    f"sample key {r.key!r} makes a member name past "
+                    f"sample key {key!r} makes a member name past "
                     "USTAR's 100-char limit")
-            for i in range(n_parts):
-                v = r[i + 1]
+            for i, ext in enumerate(exts):
+                v = r[f"p{i}"]
                 if v is None:
                     raise WebDatasetError(
-                        f"NULL part {exts[i]!r} for key {r.key!r} — a "
+                        f"NULL part {ext!r} for key {key!r} — a "
                         "sample part cannot be null; filter upstream")
-                data = v.encode("utf-8") if isinstance(v, str) else bytes(v)
-                info = tarfile.TarInfo(name=f"{r.key}.{exts[i]}")
+                data = v.encode("utf-8") if isinstance(v, str) else v
+                info = tarfile.TarInfo(name=f"{key}.{ext}")
                 info.size = len(data)
                 info.mtime = 0
                 info.uid = info.gid = 0
                 info.uname = info.gname = ""
                 info.mode = 0o644
                 tar.addfile(info, io.BytesIO(data))
-            count += 1
+            yield drain(buf)
         tar.close()
-        if count:
-            tfs, tbase = _resolve_fs(path)
-            shard = tbase.rstrip("/") + f"/shard_{pid:05d}.tar"
-            with tfs.open_output_stream(shard, compression=None) as f:
-                f.write(buf.getvalue())
-        yield count
+        yield drain(buf)
 
-    fs, base = _resolve_fs(path)
-    fs.create_dir(base, recursive=True)
-    return sum(src.rdd.mapPartitionsWithIndex(_write).collect())
+    return write_shards(src, path, "tar", encode)
+
+
+def iter_samples(data: bytes, archive: str = "") -> Iterator[
+        tuple[str, dict[str, bytes]]]:
+    """Yield ``(key, {extension: bytes})`` per sample of one tar shard:
+    consecutive same-key regular members, in archive order. Refuses
+    with :class:`WebDatasetError` (prefixed by ``archive``) on a torn or
+    unreadable tar, a corrupt member header, a missing end-of-archive
+    marker, a key that reappears non-adjacently, or a duplicate part.
+    Needs no Spark session."""
+    try:
+        tar = tarfile.open(fileobj=io.BytesIO(data), mode="r:")
+        members = tar.getmembers()
+    except tarfile.TarError as exc:
+        raise WebDatasetError(
+            f"{archive}: torn/unreadable tar: {exc}") from exc
+    # tarfile ends the member list silently at the first bad header
+    # past offset 0, so a corrupt or truncated header would drop every
+    # later sample: the walk must stop on the zero end-of-archive block
+    if data[tar.offset:tar.offset + tarfile.BLOCKSIZE] != bytes(
+            tarfile.BLOCKSIZE):
+        raise WebDatasetError(
+            f"{archive}: torn/unreadable tar: no end-of-archive block at "
+            f"byte {tar.offset} (corrupt or truncated member header)")
+    cur_key = None
+    got: dict[str, bytes] = {}
+    seen: set[str] = set()
+    for m in members:
+        if not m.isreg():
+            continue  # directories/links are not parts
+        key, ext = _split_key(m.name)
+        if key != cur_key:
+            if cur_key is not None:
+                yield cur_key, got
+                seen.add(cur_key)
+            if key in seen:
+                raise WebDatasetError(
+                    f"{archive}: key {key!r} reappears non-adjacently — "
+                    "shard violates the WebDataset adjacency rule")
+            cur_key, got = key, {}
+        if ext in got:
+            raise WebDatasetError(
+                f"{archive}: duplicate part {ext!r} for key {key!r}")
+        got[ext] = tar.extractfile(m).read()
+    if cur_key is not None:
+        yield cur_key, got
 
 
 def read_webdataset(
@@ -165,55 +205,17 @@ def read_webdataset(
             out: dict[str, list] = {"archive": [], "key": []}
             for c in cols.values():
                 out[c] = []
-
-            def flush(archive, key, got, seen):
-                missing = [e for e in parts if e not in got]
-                if missing:
-                    raise WebDatasetError(
-                        f"{archive}: sample {key!r} is missing "
-                        f"part(s) {missing} (has {sorted(got)})")
-                out["archive"].append(archive)
-                out["key"].append(key)
-                for ext in parts:
-                    out[cols[ext]].append(got[ext])
-                seen.add(key)
-
             for apath, blob in zip(pdf["path"], pdf["content"]):
-                try:
-                    tar = tarfile.open(fileobj=io.BytesIO(bytes(blob)),
-                                       mode="r:")
-                    members = tar.getmembers()
-                except tarfile.TarError as exc:
-                    raise WebDatasetError(
-                        f"{apath}: torn/unreadable tar: {exc}") from exc
-                cur_key = None
-                got: dict[str, bytes] = {}
-                seen: set[str] = set()
-                for m in members:
-                    if not m.isreg():
-                        continue  # directories/links are not parts
-                    key, ext = _split_key(m.name)
-                    if key != cur_key:
-                        if cur_key is not None:
-                            flush(apath, cur_key, got, seen)
-                        if key in seen:
-                            raise WebDatasetError(
-                                f"{apath}: key {key!r} reappears "
-                                "non-adjacently — shard violates the "
-                                "WebDataset adjacency rule")
-                        cur_key, got = key, {}
-                    if ext in got:
+                for key, got in iter_samples(bytes(blob), apath):
+                    missing = [e for e in parts if e not in got]
+                    if missing:
                         raise WebDatasetError(
-                            f"{apath}: duplicate part {ext!r} for key "
-                            f"{key!r}")
-                    got[ext] = tar.extractfile(m).read()
-                if cur_key is not None:
-                    flush(apath, cur_key, got, seen)
+                            f"{apath}: sample {key!r} is missing "
+                            f"part(s) {missing} (has {sorted(got)})")
+                    out["archive"].append(apath)
+                    out["key"].append(key)
+                    for ext in parts:
+                        out[cols[ext]].append(got[ext])
             yield pd.DataFrame(out)
 
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return files.select("path", "content").mapInPandas(_parse, schema)
+    return read_shards(spark, path, glob, _parse, schema)

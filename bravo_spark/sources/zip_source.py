@@ -12,9 +12,8 @@ in the pure-Python codec; this module is only the scale shape:
   surfaces;
 - reading is one Arrow-batched ``mapInPandas`` stage over the
   binaryFile scan: zero shuffles, zero joins at any corpus size;
-- writing is ``mapPartitionsWithIndex`` through the deterministic
-  codec writer, shard IO through pyarrow.fs (``_resolve_fs``) so
-  executor tasks reach object storage, not executor-local disks.
+- writing streams each partition through the deterministic codec
+  writer into one atomically committed shard (``sources/shards.py``).
 """
 
 from __future__ import annotations
@@ -22,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bravo_spark.sources.warc_source import _resolve_fs
+from bravo_spark.sources.shards import read_shards, write_shards
 
 
 def write_zip_shards(
@@ -39,44 +38,26 @@ def write_zip_shards(
     UTF-8). NULL names/payloads refuse by name (filter upstream);
     duplicate names within a shard and zip64-scale inputs refuse inside
     the codec. Returns members written."""
-    from bravo_spark.codecs.zipfmt import ZipError, write_zip
+    from bravo_spark.codecs.zipfmt import ZipError, iter_write_zip
 
     src = df.select(
         F.col(name_col).cast("string").alias("name"),
         F.col(data_col).alias("data"),
     )
 
-    def _write(pid, rows):
-        def entries():
-            for r in rows:
-                if r.name is None:
-                    raise ZipError("NULL member name — filter upstream")
-                v = r.data
-                if v is None:
-                    raise ZipError(f"NULL payload for member {r.name!r} "
-                                   "— filter upstream")
-                yield r.name, (v.encode("utf-8") if isinstance(v, str)
-                               else bytes(v))
+    def entries(rows):
+        for r in rows:
+            name, v = r["name"], r["data"]
+            if name is None:
+                raise ZipError("NULL member name — filter upstream")
+            if v is None:
+                raise ZipError(f"NULL payload for member {name!r} "
+                               "— filter upstream")
+            yield name, v.encode("utf-8") if isinstance(v, str) else v
 
-        count = 0
-
-        def counted():
-            nonlocal count
-            for name, data in entries():
-                count += 1
-                yield name, data
-
-        blob = write_zip(counted(), method=method)
-        if count:
-            tfs, tbase = _resolve_fs(path)
-            shard = tbase.rstrip("/") + f"/shard_{pid:05d}.zip"
-            with tfs.open_output_stream(shard, compression=None) as f:
-                f.write(blob)
-        yield count
-
-    fs, base = _resolve_fs(path)
-    fs.create_dir(base, recursive=True)
-    return sum(src.rdd.mapPartitionsWithIndex(_write).collect())
+    return write_shards(
+        src, path, "zip",
+        lambda rows: iter_write_zip(entries(rows), method=method))
 
 
 _MEMBER_SCHEMA = "archive string, name string, data binary"
@@ -111,13 +92,7 @@ def read_zip_shards(
     name; foreign zip64 archives (>65535 members / >4 GiB — the
     ImageNet shape) READ fine. Shard-grain binaryFile tasks, one
     Arrow-batched map stage, zero shuffles."""
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .load(path)
-    )
-    return files.select("path", "content").mapInPandas(
-        _parse_batches, _MEMBER_SCHEMA)
+    return read_shards(spark, path, glob, _parse_batches, _MEMBER_SCHEMA)
 
 
 def read_zip_stream(
@@ -134,11 +109,9 @@ def read_zip_stream(
     SAME Arrow parse stage as the batch reader.
     ``max_files_per_trigger`` bounds a batch for backfill over a large
     drop directory."""
-    from bravo_spark.sources.warc_source import _binaryfile_stream
-
-    return _binaryfile_stream(
-        spark, path, glob, max_files_per_trigger
-    ).select("path", "content").mapInPandas(_parse_batches, _MEMBER_SCHEMA)
+    return read_shards(spark, path, glob, _parse_batches, _MEMBER_SCHEMA,
+                       stream=True,
+                       max_files_per_trigger=max_files_per_trigger)
 
 
 __all__ = ["write_zip_shards", "read_zip_shards", "read_zip_stream"]

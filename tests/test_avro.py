@@ -110,6 +110,17 @@ def test_union_value_must_match_a_branch():
         write_ocf(sch, [{"v": "not-a-long"}])
 
 
+@pytest.mark.parametrize("t", ["string", "boolean", "long", "bytes",
+                               {"type": "array", "items": "long"}])
+def test_null_for_non_nullable_type_refuses_by_name(t):
+    """A NULL outside a ["null", ...] union refuses by name: it used to
+    encode as the string "None", as False or as an empty array, or to
+    crash with a bare TypeError."""
+    sch = {"type": "record", "name": "N", "fields": [{"name": "v", "type": t}]}
+    with pytest.raises(AvroError, match="NULL value for non-nullable"):
+        write_ocf(sch, [{"v": None}])
+
+
 # ---------------------------------------------------------------------------
 # cross-validation against the REAL avro jar in Spark's JVM
 # ---------------------------------------------------------------------------

@@ -115,3 +115,37 @@ def test_field_named_count_roundtrips(spark, tmp_path):
     assert sorted((r["count"], r["index"]) for r in back.collect()) == [
         (5, 7), (8, 9)
     ]
+
+
+def test_write_avro_file_uri(spark, tmp_path, monkeypatch):
+    """write_avro resolves ``path`` through pyarrow.fs like the other
+    shard sinks: Hadoop-style file:/ and RFC file:/// targets write the
+    same bytes as a plain path and read back. A bare ``open()`` would
+    put file:/ output under a relative directory named ``file:``."""
+    import hashlib
+
+    monkeypatch.chdir(tmp_path)  # a stray relative ``file:`` dir lands here
+    df = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(8)], _DDL).repartition(2)
+    plain = str(tmp_path / "plain")
+    counts = [write_avro(df, p, _AVRO_SCHEMA) for p in (
+        plain, "file:" + str(tmp_path / "h1"),
+        "file://" + str(tmp_path / "h2"))]
+    assert not os.path.exists(tmp_path / "file:")
+
+    def tree_md5(d):
+        names = sorted(os.listdir(d))
+        assert names, f"no shards under {d}"
+        return [
+            (n, hashlib.md5(open(os.path.join(d, n), "rb").read())
+             .hexdigest())
+            for n in names
+        ]
+
+    assert tree_md5(plain) == tree_md5(str(tmp_path / "h1")) \
+        == tree_md5(str(tmp_path / "h2"))
+    assert all(n.startswith("shard_") for n, _ in tree_md5(plain))
+    assert counts == [8, 8, 8]
+    back = read_avro(spark, "file://" + str(tmp_path / "h1"), _DDL)
+    assert sorted(r.s for r in back.collect()) == sorted(
+        f"v{i}" for i in range(8))

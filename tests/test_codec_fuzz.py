@@ -1,15 +1,16 @@
 """Hypothesis roundtrip fuzz for the container codecs (WARC, Avro OCF,
-EXIF) and the runtime block codecs (snappy, lz4, zstd and the Spark
-state-file framings): arbitrary payloads/values must survive write→read
-exactly, and truncation or corruption must raise the codec's named
-error — never return wrong data silently.
+EXIF, TFRecord, ZIP, WebDataset tar) and the runtime block codecs
+(snappy, lz4, zstd and the Spark state-file framings): arbitrary
+payloads/values must survive write→read exactly, and truncation or
+corruption must raise the codec's named error — never return wrong data
+silently.
 """
 
 from __future__ import annotations
 
 import struct
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from bravo_spark.codecs import fastpath
 from bravo_spark.codecs.avro import AvroError, read_ocf, write_ocf
@@ -317,3 +318,181 @@ def test_zstd_state_stream_truncation(data, cut):
     stream = fastpath.zstd_compress(data)
     assert ss.decode_stream(stream) == data
     _refused(ss.decode_stream, stream[: int(cut * len(stream))])
+
+
+# ---------------------------------------------------------------------------
+# shard containers: truncation and single bit flips. A cut either raises
+# the format's named error or yields a prefix of whole records equal to
+# the input; a flipped bit either raises or decodes to exactly the input.
+# ---------------------------------------------------------------------------
+
+_POS = st.integers(min_value=0)
+_BIT = st.integers(min_value=0, max_value=7)
+
+
+def _flip(blob: bytes, pos: int, bit: int) -> tuple[bytes, int]:
+    pos %= len(blob)
+    out = bytearray(blob)
+    out[pos] ^= 1 << bit
+    return bytes(out), pos
+
+
+def _tfrecord_readers():
+    from bravo_spark.codecs.tfrecord import iter_tfrecords, read_all_tfrecords
+
+    return (lambda b: list(iter_tfrecords(b)), read_all_tfrecords)
+
+
+_TF_RECS = st.lists(_PAYLOAD, min_size=1, max_size=5)
+
+
+@settings(max_examples=80, deadline=None)
+@given(recs=_TF_RECS, cut=_POS)
+def test_tfrecord_truncation_yields_whole_prefix(recs, cut):
+    from bravo_spark.codecs.tfrecord import TfRecordError, write_tfrecords
+
+    blob = write_tfrecords(recs)
+    cut %= len(blob) + 1
+    for read in _tfrecord_readers():
+        try:
+            got = read(blob[:cut])
+        except TfRecordError:
+            continue
+        assert got == recs[:len(got)]
+        assert len(got) < len(recs) or cut == len(blob)
+
+
+@settings(max_examples=120, deadline=None)
+@given(recs=_TF_RECS, pos=_POS, bit=_BIT)
+def test_tfrecord_bitflip_raises_or_exact(recs, pos, bit):
+    from bravo_spark.codecs.tfrecord import TfRecordError, write_tfrecords
+
+    blob, pos = _flip(write_tfrecords(recs), pos, bit)
+    for read in _tfrecord_readers():
+        try:
+            got = read(blob)
+        except TfRecordError:
+            continue
+        assert got == recs, f"flip at byte {pos} decoded silently"
+
+
+_ZIP_ENTRIES = st.lists(
+    st.tuples(
+        st.text(min_size=1, max_size=12).filter(lambda n: not n.endswith("/")),
+        _PAYLOAD,
+    ),
+    min_size=1, max_size=4, unique_by=lambda e: e[0],
+)
+
+
+@settings(max_examples=80, deadline=None)
+@given(entries=_ZIP_ENTRIES, method=st.sampled_from(["deflate", "stored"]),
+       cut=_POS)
+def test_zip_truncation_yields_whole_prefix(entries, method, cut):
+    from bravo_spark.codecs.zipfmt import ZipError, parse_zip, write_zip
+
+    blob = write_zip(entries, method=method)
+    cut %= len(blob) + 1
+    try:
+        got = parse_zip(blob[:cut])
+    except ZipError:
+        return
+    assert got == entries[:len(got)]
+    assert len(got) < len(entries) or cut == len(blob)
+
+
+@settings(max_examples=150, deadline=None)
+@given(entries=_ZIP_ENTRIES, method=st.sampled_from(["deflate", "stored"]),
+       pos=_POS, bit=_BIT)
+# the central directory's UTF-8 flag bit (byte 50 here): a non-ASCII
+# name must not come back silently re-decoded as cp437
+@example(entries=[("\u00e9.txt", b"hello")], method="stored", pos=50, bit=3)
+def test_zip_bitflip_raises_or_exact(entries, method, pos, bit):
+    from bravo_spark.codecs.zipfmt import ZipError, parse_zip, write_zip
+
+    blob, pos = _flip(write_zip(entries, method=method), pos, bit)
+    try:
+        got = parse_zip(blob)
+    except ZipError:
+        return
+    assert got == entries, f"flip at byte {pos} decoded silently"
+
+
+_WDS_SAMPLES = st.lists(
+    st.tuples(st.text(alphabet="abcdefghij0123456789-_", min_size=1,
+                      max_size=20),
+              st.binary(max_size=700), st.binary(max_size=700)),
+    min_size=1, max_size=4, unique_by=lambda s: s[0],
+)
+
+
+def _wds_tar(samples) -> bytes:
+    """The shard bytes write_webdataset_shards emits for ``samples``
+    (USTAR, zeroed mtime/owner, mode 0644, sorted extensions)."""
+    import io
+    import tarfile
+
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w",
+                      format=tarfile.USTAR_FORMAT) as tar:
+        for key, a, b in samples:
+            for ext, data in (("aa", a), ("bb", b)):
+                info = tarfile.TarInfo(f"{key}.{ext}")
+                info.size, info.mtime, info.mode = len(data), 0, 0o644
+                info.uid = info.gid = 0
+                info.uname = info.gname = ""
+                tar.addfile(info, io.BytesIO(data))
+    return buf.getvalue()
+
+
+def _wds_parse(blob: bytes):
+    from bravo_spark.sources.webdataset_source import iter_samples
+
+    return [(k, got.get("aa"), got.get("bb"))
+            for k, got in iter_samples(blob, "shard.tar")]
+
+
+@settings(max_examples=80, deadline=None)
+@given(samples=_WDS_SAMPLES, cut=_POS)
+def test_webdataset_truncation_yields_whole_prefix(samples, cut):
+    from bravo_spark.sources.webdataset_source import WebDatasetError
+
+    blob = _wds_tar(samples)
+    cut %= len(blob) + 1
+    try:
+        got = _wds_parse(blob[:cut])
+    except WebDatasetError:
+        return
+    assert got == samples[:len(got)]
+    assert len(got) < len(samples) or cut == len(blob) or (
+        blob[cut:].count(0) == len(blob) - cut)  # only end padding was cut
+
+
+@settings(max_examples=150, deadline=None)
+@given(samples=_WDS_SAMPLES, pos=_POS, bit=_BIT)
+def test_webdataset_bitflip_raises_or_exact(samples, pos, bit):
+    """tar carries no payload checksum (its header checksum covers the
+    header block only), so a flip inside a member's data must come back
+    as exactly that flipped byte and nothing else; a flip anywhere else
+    raises or decodes to exactly the input."""
+    import io
+    import tarfile
+
+    from bravo_spark.sources.webdataset_source import WebDatasetError
+
+    clean = _wds_tar(samples)
+    blob, pos = _flip(clean, pos, bit)
+    want = [(k, a, b) for k, a, b in samples]
+    with tarfile.open(fileobj=io.BytesIO(clean), mode="r:") as tar:
+        for i, m in enumerate(tar.getmembers()):
+            if m.offset_data <= pos < m.offset_data + m.size:
+                k, a, b = want[i // 2]
+                part = bytearray(b if i % 2 else a)
+                part[pos - m.offset_data] ^= 1 << bit
+                want[i // 2] = (k, a, bytes(part)) if i % 2 else (
+                    k, bytes(part), b)
+    try:
+        got = _wds_parse(blob)
+    except WebDatasetError:
+        return
+    assert got == want, f"flip at byte {pos} decoded silently"

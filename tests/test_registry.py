@@ -215,6 +215,43 @@ def test_estimated_scan_splits_matches_rdd_probe(spark, sf_dir, tmp_path):
     assert est >= 2
 
 
+def test_size_suffixes_cover_terabytes_and_petabytes():
+    """maxPartitionBytes=1t used to miss the suffix table and silently
+    fall back to the 128 MB default."""
+    from bravo_spark import catalog
+
+    assert catalog._size_bytes("1t", 0) == 1 << 40
+    assert catalog._size_bytes("2TB", 0) == 2 << 40
+    assert catalog._size_bytes("1p", 0) == 1 << 50
+    assert catalog._size_bytes("3pb", 0) == 3 << 50
+    assert catalog._size_bytes("1x", 7) == 7
+
+
+def test_estimated_scan_splits_skips_empty_files_refuses_subdirs(
+    spark, tmp_path
+):
+    """Zero-byte files get no split in Spark's scan, so the replay must
+    not charge them an open cost; a subdirectory (partitioned layout)
+    is outside what the replay models, so it returns None and the
+    caller falls back to the RDD probe."""
+    import os
+
+    from bravo_spark import catalog
+
+    many = str(tmp_path / "many.parquet")
+    spark.range(50_000).repartition(8).write.parquet(many)
+    # one empty file: charging it an open cost moves the estimate to 3
+    # splits where Spark makes 4
+    open(os.path.join(many, "zz-empty.parquet"), "wb").close()
+    assert catalog.estimated_scan_splits(spark, many) \
+        == spark.read.parquet(many).rdd.getNumPartitions()
+
+    nested = str(tmp_path / "nested.parquet")
+    spark.range(10).write.parquet(nested)
+    spark.range(10).write.parquet(os.path.join(nested, "k=1"))
+    assert catalog.estimated_scan_splits(spark, nested) is None
+
+
 def test_table_spread_spreads_fixture_and_noop_on_many_splits(
     spark, sf_dir, tmp_path
 ):

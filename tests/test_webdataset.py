@@ -13,6 +13,7 @@ import pytest
 
 from bravo_spark.sources.webdataset_source import (
     WebDatasetError,
+    iter_samples,
     read_webdataset,
     write_webdataset_shards,
 )
@@ -132,6 +133,28 @@ def test_refusal_classes(spark, tmp_path):
                                 {"txt": "txt"})
     with pytest.raises(ValueError, match="empty"):
         write_webdataset_shards(null_df, str(tmp_path / "w"), "key", {})
+
+
+def test_corrupt_or_cut_later_header_refuses_not_truncates():
+    """tarfile ends its member list silently at a bad header past
+    offset 0, which dropped every later sample without an error. The
+    parse now requires the walk to stop on the zero end-of-archive
+    block: a flipped header bit or a cut at a member boundary refuses."""
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tar:
+        for key in ("a", "b"):
+            info = tarfile.TarInfo(f"{key}.txt")
+            info.size = 3
+            tar.addfile(info, io.BytesIO(key.encode() * 3))
+    blob = buf.getvalue()
+    assert [k for k, _ in iter_samples(blob)] == ["a", "b"]
+    second = 1024  # header 512 + one padded data block
+    flipped = bytearray(blob)
+    flipped[second + 1] ^= 0x01  # inside b.txt's name field
+    with pytest.raises(WebDatasetError, match="end-of-archive"):
+        list(iter_samples(bytes(flipped), "s.tar"))
+    with pytest.raises(WebDatasetError, match="end-of-archive"):
+        list(iter_samples(blob[:second], "s.tar"))
 
 
 def test_key_grammar_refusals(spark, tmp_path):

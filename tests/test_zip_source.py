@@ -170,6 +170,17 @@ def test_local_name_mismatch_refuses():
         parse_zip(bytes(blob))
 
 
+def test_utf8_flag_disagreement_refuses():
+    """Each header's name decodes under its own flags: clearing the
+    UTF-8 bit in the central directory alone used to return the name
+    re-decoded as cp437 ('├⌐.txt' for 'é.txt') without an error."""
+    blob = bytearray(write_zip([("é.txt", b"pp")], method="stored"))
+    cd = _cd_off(bytes(blob))
+    struct.pack_into("<H", blob, cd + 8, 0)  # central flags only
+    with pytest.raises(ZipError, match="inconsistent"):
+        parse_zip(bytes(blob))
+
+
 def test_lying_uncompressed_size_refuses_both_ways():
     payload = b"A" * 10_000
     blob = bytearray(write_zip([("x.txt", payload)], method="deflate"))
