@@ -55,6 +55,8 @@ class OperatorStateReader:
         self.meta = sp.read_savepoint_meta(path)
         self._rows: DataFrame | None = None
         self._read_names: set[str] = set()
+        # frame handed out -> the source states it can hold
+        self._issued: dict[DataFrame, frozenset[str]] = {}
 
     @property
     def max_parallelism(self) -> int:
@@ -62,17 +64,34 @@ class OperatorStateReader:
 
     def all_keyed_state_rows(self) -> DataFrame:
         if self._rows is None:
-            self._rows = sp.read_savepoint(self.spark, self.path)
+            self._rows = self._issue(
+                sp.read_savepoint(self.spark, self.path), self.meta.state_ids
+            )
         return self._rows
 
     def keyed_state_rows(self, names: list[str]) -> DataFrame:
         """F4 — named subset (OperatorStateReader.java:148-152)."""
-        return sr.filter_states(self.all_keyed_state_rows(), names)
+        return self._issue(
+            sr.filter_states(self.all_keyed_state_rows(), names),
+            set(names) & set(self.meta.state_ids),
+        )
 
     def unread_state_rows(self) -> DataFrame:
         """F3 — complement of everything parsed so far
         (OperatorStateReader.java:131-140): the rows to migrate untouched."""
-        return sr.exclude_states(self.all_keyed_state_rows(), sorted(self._read_names))
+        return self._issue(
+            sr.exclude_states(self.all_keyed_state_rows(), sorted(self._read_names)),
+            set(self.meta.state_ids) - self._read_names,
+        )
+
+    def _issue(self, rows: DataFrame, names) -> DataFrame:
+        self._issued[rows] = frozenset(names)
+        return rows
+
+    def issued_states(self, rows: DataFrame) -> frozenset[str] | None:
+        """The source states a frame this reader handed out can hold, or
+        None for any other frame (including one derived from it)."""
+        return self._issued.get(rows)
 
     # --- typed readers (P1-P7); each marks its state as read ---
 
@@ -176,8 +195,8 @@ class OperatorStateWriter:
             self.parallelism = parallelism
         self.source = source
         self.new_path = new_path
-        self._added: list[DataFrame] = []
-        self._added_names: list[str] = []
+        # (rows, the states they declare; None = name them from the data)
+        self._added: list[tuple[DataFrame, frozenset[str] | None]] = []
         self._deleted: set[str] = set()
         self._nk_transform: Callable[[int, ops.OperatorStateBackend], None] | None = None
 
@@ -187,17 +206,19 @@ class OperatorStateWriter:
         rows = sr.kv_to_state_rows(
             kv_df, name, key_codec, value_codec, max_parallelism=self.max_parallelism
         )
-        self._added.append(rows)
-        self._added_names.append(name)
+        self._added.append((rows, frozenset([name])))
 
     # the reference distinguishes add (existing meta) from create (new meta
-    # entry, OperatorStateWriter.java:204-216); our metadata is derived from
-    # the rows either way, so create == add
+    # entry, OperatorStateWriter.java:204-216); here both declare the name
+    # and write_all numbers every declared name, so create == add
     create_new_value_state = add_value_state
 
     def add_keyed_state_rows(self, rows: DataFrame) -> None:
-        """U1 — accumulate raw rows (OperatorStateWriter.java:127-130)."""
-        self._added.append(rows)
+        """U1 — accumulate raw rows (OperatorStateWriter.java:127-130).
+        A frame the source reader handed out declares its states; any
+        other frame is named by a ``distinct()`` pass in ``write_all``."""
+        names = self.source.issued_states(rows) if self.source else None
+        self._added.append((rows, names))
 
     def delete_keyed_state(self, name: str) -> None:
         """Drop a state (OperatorStateWriter.java:138-141)."""
@@ -213,20 +234,31 @@ class OperatorStateWriter:
         # accumulated rows are written — untouched states are migrated
         # explicitly by the user via reader.unread_state_rows() (the
         # RowFilter drops rows of deleted states from whatever was added).
-        parts = [
-            sr.exclude_states(df, sorted(self._deleted)) if self._deleted else df
-            for df in self._added
-        ]
-        if not parts:
+        # State ids are declared on the driver, like the reference's meta
+        # snapshots (:94-102,138-141,204-216): every declared name minus
+        # the deleted ones, numbered in sorted order — the rule
+        # write_savepoint applies to the names it finds — so the upstream
+        # runs once. A declared state with no rows stays listed.
+        if not self._added:
             raise ValueError("nothing to write")
-        rows = parts[0]
-        for df in parts[1:]:
-            rows = rows.unionByName(df)
+        deleted = sorted(self._deleted)
+        parts = [
+            (sr.exclude_states(df, deleted) if deleted else df, names)
+            for df, names in self._added
+        ]
+        declared = set().union(*(n for _df, n in parts if n is not None))
+        unnamed = [df for df, n in parts if n is None]
+        if unnamed:
+            declared.update(
+                r[0] for r in _union(unnamed).select("state_name").distinct().collect()
+            )
+        declared -= self._deleted
         meta = sp.write_savepoint(
-            rows,
+            _union([df for df, _n in parts]),
             self.new_path,
             max_parallelism=self.max_parallelism,
             parallelism=self.parallelism,
+            state_ids={n: i for i, n in enumerate(sorted(declared))},
         )
         # EP3 write side: carry over (optionally transformed) operator state
         if self.source is not None:
@@ -246,6 +278,13 @@ class OperatorStateWriter:
                 self._nk_transform(i, b)
             ops.write_operator_state(self.new_path, backends)
         return meta
+
+
+def _union(frames: list[DataFrame]) -> DataFrame:
+    out = frames[0]
+    for df in frames[1:]:
+        out = out.unionByName(df)
+    return out
 
 
 def rescale_savepoint(

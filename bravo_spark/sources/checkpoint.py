@@ -7,7 +7,7 @@ RocksDB does the LSM resolution transparently; here the same semantics are
 computed AS A DATAFLOW, which is the shape that scales:
 
 1. **Parallel SST scan** — one Spark task per SST file (mapInPandas over a
-   file-list frame), emitting raw ``(state_name, key_ns, seq, vtype,
+   ``Range`` of split ids), emitting raw ``(state_name, key_ns, seq, vtype,
    value)``. Column-family pushdown skips whole files from the footer +
    properties block alone, before any data-block I/O.
 2. **One shuffle on (state_name, key_ns)** groups every version of a user
@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from bravo_spark.sources import sst as sstmod
+from bravo_spark.sources.savepoint import split_frame
 
 _RAW_SCHEMA = "state_name string, key_ns binary, seq long, vtype int, value binary"
 
@@ -161,14 +162,15 @@ def read_incremental_checkpoint(
         state_filter = lambda _n: True  # noqa: E731
 
     paths = files if files is not None else discover_sst_files(ckpt_dir)
-    frame = spark.createDataFrame(
-        [(p,) for p in paths], schema="path string"
-    ).repartition(max(1, len(paths)))  # one SST per task
 
-    raw = frame.mapInPandas(
-        lambda it: _scan_ssts(it, state_filter, verify_checksums),
-        schema=_RAW_SCHEMA,
-    )
+    def scan(pdf_iter):
+        # one SST per task: map each split id back to its path
+        frames = (
+            pd.DataFrame({"path": [paths[i] for i in pdf["id"]]}) for pdf in pdf_iter
+        )
+        return _scan_ssts(frames, state_filter, verify_checksums)
+
+    raw = split_frame(spark, len(paths)).mapInPandas(scan, schema=_RAW_SCHEMA)
     return resolve_lsm(raw)
 
 

@@ -224,11 +224,10 @@ class SavepointWriter(DataSourceArrowWriter):
         os.makedirs(path, exist_ok=True)
 
     def write(self, batches):
-        import os
-        import uuid as _uuid
+        import itertools
 
-        from bravo_spark.codecs import fastpath
         from bravo_spark.codecs import flink as fc
+        from bravo_spark.sources.savepoint import commit_section_file
 
         prefix = fc.key_group_prefix_bytes(self.max_parallelism)
         mask = 0x7F if prefix == 1 else 0x7FFF
@@ -254,29 +253,17 @@ class SavepointWriter(DataSourceArrowWriter):
                 buffered.append((op, kg, sid, kns, bytes(val)))
         buffered.sort(key=lambda t: t[:3])
 
-        files = []
-        i, n = 0, len(buffered)
-        while i < n:
-            op = buffered[i][0]
-            fpath = os.path.join(self.path, f"op-{op}-{_uuid.uuid4().hex}")
-            offsets: dict[int, int] = {}
-            with open(fpath, "wb") as f:
-                while i < n and buffered[i][0] == op:
-                    kg = buffered[i][1]
-                    entries = []
-                    while i < n and buffered[i][0] == op and buffered[i][1] == kg:
-                        _op, _kg, sid, kns, val = buffered[i]
-                        entries.append((sid, kns, val))
-                        i += 1
-                    offsets[kg] = f.tell()
-                    buf = fc.write_key_group_section(entries)
-                    if self.compression:
-                        buf = fastpath.frame_compress(buf)
-                    f.write(buf)
-            files.append(
-                {"path": fpath, "op_index": op,
-                 "offsets": {str(k): v for k, v in offsets.items()}}
+        files = [
+            commit_section_file(
+                self.path, op,
+                (
+                    (kg, [(sid, kns, val) for _op, _kg, sid, kns, val in group])
+                    for kg, group in itertools.groupby(run, key=lambda t: t[1])
+                ),
+                self.compression,
             )
+            for op, run in itertools.groupby(buffered, key=lambda t: t[0])
+        ]
         return SavepointCommit(json.dumps(files))
 
     def _new_files(self, messages):

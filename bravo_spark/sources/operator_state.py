@@ -24,6 +24,8 @@ import os
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from bravo_spark.sources.shards import commit_path
+
 OPERATOR_STATE_FILE = "_bravo_operator_state"
 
 
@@ -78,8 +80,10 @@ def write_operator_state(path: str, backends: list[OperatorStateBackend]) -> Non
         }
         for b in backends
     ]
-    with open(os.path.join(path, OPERATOR_STATE_FILE), "w") as f:
-        json.dump({"version": 1, "subtasks": payload}, f, indent=1)
+    commit_path(
+        os.path.join(path, OPERATOR_STATE_FILE),
+        json.dumps({"version": 1, "subtasks": payload}, indent=1).encode(),
+    )
 
 
 def _load(path: str) -> list[dict]:

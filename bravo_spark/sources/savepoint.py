@@ -31,7 +31,9 @@ snapshot's original subtask count.
 
 from __future__ import annotations
 
+import itertools
 import json
+import operator
 import os
 import uuid
 from dataclasses import dataclass, field
@@ -44,6 +46,7 @@ from pyspark.sql import functions as F
 
 from bravo_spark.codecs import fastpath
 from bravo_spark.codecs import flink as fc
+from bravo_spark.sources.shards import commit_path
 from bravo_spark.sources.staterows import (
     STATE_ROW_SCHEMA,
     with_key_group_column,
@@ -106,8 +109,11 @@ def write_savepoint(
     prefix inside ``key_ns`` sized by it); the writer re-derives each
     row's key group from that prefix, so a mismatch mis-reads key bytes
     as group bytes. Sections whose derived group falls outside
-    ``[0, max_parallelism)`` are refused by name rather than written."""
-    spark = rows.sparkSession
+    ``[0, max_parallelism)`` are refused by name rather than written.
+
+    Every file is committed atomically (``shards.commit_file``): a refused
+    or failed task leaves no section file under its final name, and
+    ``_bravo_metadata`` appears only after every section file has."""
     os.makedirs(path, exist_ok=True)
     if state_ids is None:
         names = [r[0] for r in rows.select("state_name").distinct().collect()]
@@ -130,55 +136,29 @@ def write_savepoint(
 
     # repartition hashes op_index into `parallelism` partitions, so a
     # partition can receive several operator indexes (hash collision); the
-    # in-partition sort leads with op_index and the writer rolls to a new
+    # in-partition sort leads with op_index and the writer starts a new
     # file whenever it changes — still exactly one file per operator index.
     shuffled = routed.repartition(parallelism, "op_index").sortWithinPartitions(
         "op_index", "key_group", "state_id"
     )
 
     def write_partition(batches: Iterator[pd.DataFrame]):
-        # Streaming single-pass writer: rows arrive sorted by (op_index,
-        # key_group, state_id); emit one section per key group, track
-        # offsets. Mirrors RocksDBSavepointWriter.java:132-166 but writes
-        # sections via the codec layer.
-        state = {"fh": None, "path": None, "op": None, "kg": None}
-        offsets: dict[int, int] = {}
-        entries: list[tuple[int, bytes, bytes]] = []
-        done: list[tuple[int, str, dict[int, int]]] = []
+        # Streaming single-pass writer (RocksDBSavepointWriter.java:132-166):
+        # rows arrive sorted by (op_index, key_group, state_id); each
+        # op_index run becomes one file of per-key-group sections.
+        from pyspark import TaskContext
 
-        def flush_kg():
-            if state["fh"] is not None and entries:
-                offsets[state["kg"]] = state["fh"].tell()
-                buf = fc.write_key_group_section(entries)
-                if compression:
-                    buf = fastpath.frame_compress(buf)
-                state["fh"].write(buf)
-            entries.clear()
+        attempt = TaskContext.get().taskAttemptId()
 
-        def close_file():
-            flush_kg()
-            if state["fh"] is not None:
-                state["fh"].close()
-                done.append((state["op"], state["path"], dict(offsets)))
-                offsets.clear()
-                state.update(fh=None, path=None, op=None, kg=None)
+        def sorted_rows():
+            for pdf in batches:
+                yield from zip(
+                    pdf["op_index"].tolist(), pdf["key_group"].tolist(),
+                    pdf["state_id"].tolist(), pdf["key_ns"], pdf["value"],
+                )
 
-        for pdf in batches:
-            for kg, opi, sid, kns, val in zip(
-                pdf["key_group"], pdf["op_index"], pdf["state_id"],
-                pdf["key_ns"], pdf["value"],
-            ):
-                opi, kg, sid = int(opi), int(kg), int(sid)
-                if sid < 0:
-                    raise ValueError(
-                        "rows contain a state_name with no state_ids "
-                        f"entry (provided: {sorted(ids)}) — cover every "
-                        "state present, or omit state_ids to derive the "
-                        "mapping from the data"
-                    )
-                # range-check EVERY row, not just group changes: the first
-                # group of a section file is recorded at file open, and a
-                # single-group file would otherwise never re-compare
+        def key_groups(run):
+            for kg, group in itertools.groupby(run, key=operator.itemgetter(1)):
                 if not 0 <= kg < max_parallelism:
                     raise ValueError(
                         f"derived key group {kg} is outside "
@@ -187,24 +167,28 @@ def write_savepoint(
                         "write_savepoint was given (the key-group "
                         "prefix width inside key_ns no longer matches)"
                     )
-                if state["op"] is not None and opi != state["op"]:
-                    close_file()
-                if state["fh"] is None:
-                    fpath = os.path.join(path, f"op-{opi}-{uuid.uuid4().hex}")
-                    state.update(fh=open(fpath, "wb"), path=fpath, op=opi, kg=kg)
-                if kg != state["kg"]:
-                    flush_kg()
-                    state["kg"] = kg
-                entries.append((sid, bytes(kns), bytes(val)))
-        close_file()
+                entries = []
+                for _op, _kg, sid, kns, val in group:
+                    if sid < 0:
+                        raise ValueError(
+                            "rows contain a state_name with no state_ids "
+                            f"entry (provided: {sorted(ids)}) — cover every "
+                            "state present, or omit state_ids to derive the "
+                            "mapping from the data"
+                        )
+                    entries.append((sid, bytes(kns), bytes(val)))
+                yield kg, entries
+
+        done = [
+            commit_section_file(path, opi, key_groups(run), compression, attempt)
+            for opi, run in itertools.groupby(sorted_rows(), key=operator.itemgetter(0))
+        ]
         if done:
             yield pd.DataFrame(
                 {
-                    "op_index": [d[0] for d in done],
-                    "file": [d[1] for d in done],
-                    "offsets": [
-                        json.dumps({str(k): v for k, v in d[2].items()}) for d in done
-                    ],
+                    "op_index": [d["op_index"] for d in done],
+                    "file": [d["path"] for d in done],
+                    "offsets": [json.dumps(d["offsets"]) for d in done],
                 }
             )
 
@@ -224,10 +208,32 @@ def write_savepoint(
                 "offsets": {k: int(v) for k, v in json.loads(h["offsets"]).items()},
             }
         )
-    with open(os.path.join(path, METADATA_FILE), "w") as f:
-        f.write(meta.to_json())
-    _ = spark  # session retained for API symmetry
+    commit_path(os.path.join(path, METADATA_FILE), meta.to_json().encode())
     return meta
+
+
+def commit_section_file(
+    path: str, op_index: int, key_groups, compression: bool, attempt=None
+) -> dict:
+    """Stream one operator index's ``(key_group, entries)`` runs, in
+    ascending key-group order, as ``{path}/op-{op_index}-{uuid}`` through
+    ``shards.commit_file``; returns the file's metadata entry with the
+    byte offset of each key group's section."""
+    fpath = os.path.join(path, f"op-{op_index}-{uuid.uuid4().hex}")
+    offsets: dict[str, int] = {}
+
+    def sections():
+        pos = 0
+        for kg, entries in key_groups:
+            buf = fc.write_key_group_section(entries)
+            if compression:
+                buf = fastpath.frame_compress(buf)
+            offsets[str(kg)] = pos
+            pos += len(buf)
+            yield buf
+
+    commit_path(fpath, sections(), attempt)
+    return {"path": fpath, "op_index": op_index, "offsets": offsets}
 
 
 def read_savepoint_meta(path: str) -> SavepointMeta:
@@ -315,15 +321,11 @@ def _plan_scan(path, state_names, state_filter, splits_per_file=None):
     return splits, id_to_name, state_filter, meta.compression
 
 
-def _split_frame(spark: SparkSession, splits):
-    rows = [
-        (fpath, json.dumps(spans)) for fpath, spans in splits
-    ]
-    n = max(1, len(rows))
-    return (
-        spark.createDataFrame(rows, schema="file string, spans string")
-        .repartition(n)  # one scan split per task
-    )
+def split_frame(spark: SparkSession, n: int) -> DataFrame:
+    """One row per planned split, ``id`` = 0..n-1, one task each: a JVM
+    ``Range`` leaf, so planning a scan needs no Python RDD and no
+    shuffle. Scan closures keep their split list and look each id up."""
+    return spark.range(0, n, 1, max(1, n))
 
 
 def iter_file_spans(fpath, spans, id_to_name, state_filter, compressed=False):
@@ -340,32 +342,27 @@ def iter_file_spans(fpath, spans, id_to_name, state_filter, compressed=False):
             yield from fc.iter_key_group_section(buf, id_to_name, state_filter)
 
 
-def _scan_splits(pdf_iter, id_to_name, state_filter, compressed=False):
-    for pdf in pdf_iter:
-        for fpath, spans_json in zip(pdf["file"], pdf["spans"]):
-            names, keys, vals = [], [], []
-            for name, key, val in iter_file_spans(
-                fpath, json.loads(spans_json), id_to_name, state_filter,
-                compressed,
-            ):
-                names.append(name)
-                keys.append(key)
-                vals.append(val)
-            yield pd.DataFrame(
-                {"state_name": names, "key_ns": keys, "value": vals},
-                columns=["state_name", "key_ns", "value"],
-            )
-
-
 def _scan_df(spark, splits, id_to_name, state_filter, compressed=False) -> DataFrame:
-    """Arrow-batched scan: split metadata DataFrame → mapInPandas decoder.
-    One Python hop, no row pickling (vs. parallelize+createDataFrame)."""
-    from bravo_spark.sources.staterows import STATE_ROW_SCHEMA as _schema
+    """Arrow-batched scan: split ids → mapInPandas decoder, one output
+    batch per split."""
 
-    return _split_frame(spark, splits).mapInPandas(
-        lambda it: _scan_splits(it, id_to_name, state_filter, compressed),
-        schema=_schema,
-    )
+    def scan(pdf_iter):
+        for pdf in pdf_iter:
+            for i in pdf["id"]:
+                fpath, spans = splits[i]
+                names, keys, vals = [], [], []
+                for name, key, val in iter_file_spans(
+                    fpath, spans, id_to_name, state_filter, compressed
+                ):
+                    names.append(name)
+                    keys.append(key)
+                    vals.append(val)
+                yield pd.DataFrame(
+                    {"state_name": names, "key_ns": keys, "value": vals},
+                    columns=["state_name", "key_ns", "value"],
+                )
+
+    return split_frame(spark, len(splits)).mapInPandas(scan, schema=STATE_ROW_SCHEMA)
 
 
 def read_savepoint_kv(
@@ -415,10 +412,10 @@ def read_savepoint_kv(
         for pdf in pdf_iter:
             raw_keys: list[bytes] = []
             raw_vals: list[bytes] = []
-            for fpath, spans_json in zip(pdf["file"], pdf["spans"]):
+            for i in pdf["id"]:
+                fpath, spans = splits[i]
                 for _n, kns, raw in iter_file_spans(
-                    fpath, json.loads(spans_json), id_to_name, state_filter,
-                    compressed,
+                    fpath, spans, id_to_name, state_filter, compressed
                 ):
                     raw_keys.append(kns)
                     raw_vals.append(raw)
@@ -440,7 +437,7 @@ def read_savepoint_kv(
                 vals.append(fc.decode_value_state(raw, value_codec, ttl=ttl))
             yield pd.DataFrame({"key": keys, "value": vals}, columns=["key", "value"])
 
-    return _split_frame(spark, splits).mapInPandas(scan_decode, schema=schema)
+    return split_frame(spark, len(splits)).mapInPandas(scan_decode, schema=schema)
 
 
 LATEST_POINTER = "LATEST"

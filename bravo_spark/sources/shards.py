@@ -18,7 +18,9 @@ the executor, so tasks reach object storage, not executor-local disks.
 from __future__ import annotations
 
 import io
+import os
 import re
+import uuid
 from typing import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +73,17 @@ def commit_file(fs, final: str, chunks: Iterable[bytes], attempt) -> None:
         except OSError:
             pass
         raise
+
+
+def commit_path(path: str, data: bytes | Iterable[bytes], attempt=None) -> None:
+    """:func:`commit_file` onto a plain path or filesystem URI. ``data`` is
+    the whole file or an iterable of byte chunks; ``attempt`` (default: a
+    fresh uuid) names the temporary."""
+    fs, final = _resolve_fs(path)
+    if fs.type_name == "local":
+        final = os.path.abspath(final)  # the temporary needs a directory
+    chunks = [data] if isinstance(data, bytes) else data
+    commit_file(fs, final, chunks, uuid.uuid4().hex if attempt is None else attempt)
 
 
 def write_shards(
@@ -144,4 +157,4 @@ def read_shards(
         parse, schema)
 
 
-__all__ = ["write_shards", "read_shards", "commit_file", "drain"]
+__all__ = ["write_shards", "read_shards", "commit_file", "commit_path", "drain"]

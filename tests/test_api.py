@@ -464,3 +464,139 @@ def test_audit_savepoint_deep_on_compressed(spark, tmp_path):
     rows_found = mt.audit_savepoint(spark, base, deep=True).collect()
     checks = {r["check"] for r in rows_found}
     assert checks & {"decode_failure", "offset_out_of_bounds"}, checks
+
+
+def _two_state_savepoint(spark, tmp_path, n=20):
+    kv = spark.createDataFrame([(k, k) for k in range(n)], "key int, value int")
+    rows = sr.kv_to_state_rows(kv, "Count", api.INT, api.INT).unionByName(
+        sr.kv_to_state_rows(kv, "Other", api.INT, api.INT)
+    )
+    path = str(tmp_path / "two")
+    sp.write_savepoint(rows, path, max_parallelism=128, parallelism=2)
+    return path
+
+
+def _sections(meta) -> dict[int, bytes]:
+    out = {}
+    for f in meta.files:
+        with open(f["path"], "rb") as fh:
+            out[f["op_index"]] = fh.read()
+    return out
+
+
+def test_write_all_runs_upstream_once(spark, tmp_path):
+    """The state ids are declared on the driver, so write_all runs the
+    upstream (here a counting mapInPandas over the scan) exactly once —
+    no names pass before the write."""
+    base = _two_state_savepoint(spark, tmp_path)
+    reader = api.OperatorStateReader(spark, base)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            seen.add(len(pdf))
+            yield pdf
+
+    counted = reader.read_value_kv("Count", api.INT, api.INT).mapInPandas(
+        count_rows, "key int, value int"
+    )
+    writer = api.OperatorStateWriter(reader, str(tmp_path / "v2"))
+    writer.add_value_state("Count", counted, api.INT, api.INT)
+    writer.add_keyed_state_rows(reader.unread_state_rows())
+    meta = writer.write_all()
+    assert seen.value == 20
+    assert meta.state_ids == {"Count": 0, "Other": 1}
+
+
+def test_declared_state_ids_match_derived(spark, tmp_path):
+    """When every declared state has rows, the declared ids and the
+    section bytes equal what write_savepoint derives from the data."""
+    base = _two_state_savepoint(spark, tmp_path)
+    reader = api.OperatorStateReader(spark, base)
+    doubled = reader.read_value_kv("Count", api.INT, api.INT).withColumn(
+        "value", F.col("value") * 2
+    )
+    writer = api.OperatorStateWriter(reader, str(tmp_path / "declared"))
+    writer.add_value_state("Count", doubled, api.INT, api.INT)
+    writer.add_keyed_state_rows(reader.unread_state_rows())
+    declared = writer.write_all()
+
+    rows = sr.kv_to_state_rows(doubled, "Count", api.INT, api.INT).unionByName(
+        reader.unread_state_rows()
+    )
+    derived = sp.write_savepoint(
+        rows, str(tmp_path / "derived"), max_parallelism=128, parallelism=2
+    )
+    assert declared.state_ids == derived.state_ids == {"Count": 0, "Other": 1}
+    assert _sections(declared) == _sections(derived)
+
+
+def test_raw_rows_of_a_new_state_are_written(spark, tmp_path):
+    """Raw rows the reader did not hand out (here a new state built by
+    the caller) are named from the data and written next to the
+    reader's declared states; a deleted state drops out of both."""
+    base = _two_state_savepoint(spark, tmp_path)
+    reader = api.OperatorStateReader(spark, base)
+    fresh = sr.kv_to_state_rows(
+        spark.createDataFrame([(7, 70)], "key int, value int"),
+        "Fresh", api.INT, api.INT,
+    )
+    writer = api.OperatorStateWriter(reader, str(tmp_path / "v2"))
+    writer.add_keyed_state_rows(reader.all_keyed_state_rows())
+    writer.add_keyed_state_rows(fresh)
+    writer.delete_keyed_state("Other")
+    meta = writer.write_all()
+    assert meta.state_ids == {"Count": 0, "Fresh": 1}
+
+    r2 = api.OperatorStateReader(spark, str(tmp_path / "v2"))
+    got = [tuple(r) for r in r2.read_value_kv("Fresh", api.INT, api.INT).collect()]
+    assert got == [(7, 70)]
+    assert r2.read_value_kv("Count", api.INT, api.INT).count() == 20
+    assert r2.keyed_state_rows(["Other"]).count() == 0
+
+
+def test_empty_value_state_stays_listed(spark, tmp_path):
+    """Reference semantics: the writer registers a created state's meta
+    snapshot whether or not its input has rows
+    (OperatorStateWriter.java:204-216), so an empty add_value_state input
+    leaves the state listed with no rows."""
+    base = _two_state_savepoint(spark, tmp_path)
+    reader = api.OperatorStateReader(spark, base)
+    writer = api.OperatorStateWriter(reader, str(tmp_path / "v2"))
+    empty = spark.createDataFrame([], "key int, value int")
+    writer.create_new_value_state("Empty", empty, api.INT, api.INT)
+    writer.add_keyed_state_rows(reader.all_keyed_state_rows())
+    meta = writer.write_all()
+    assert meta.state_ids == {"Count": 0, "Empty": 1, "Other": 2}
+
+    r2 = api.OperatorStateReader(spark, str(tmp_path / "v2"))
+    assert r2.meta.state_ids == meta.state_ids
+    assert r2.read_value_kv("Empty", api.INT, api.INT).count() == 0
+    assert r2.read_value_kv("Count", api.INT, api.INT).count() == 20
+
+
+def test_refused_write_leaves_no_section_file(spark, tmp_path):
+    """A refusal after valid sections were streamed must not leave the
+    partial section file under its final name: each file is committed
+    from a hidden temporary, which the failing task deletes."""
+    import os
+
+    import pytest as _pytest
+
+    good = sr.kv_to_state_rows(
+        spark.createDataFrame([(k, k) for k in range(200)], "key int, value int"),
+        "good", api.INT, api.INT,
+    )
+    # an unmapped state in the last key group: it sorts after every
+    # valid section of the single operator file
+    bad = spark.createDataFrame(
+        [("bad", bytes([127, 0, 0, 0, 1]), b"\x00\x00\x00\x01")],
+        "state_name string, key_ns binary, value binary",
+    )
+    out = str(tmp_path / "refused")
+    with _pytest.raises(Exception, match="state_ids"):
+        sp.write_savepoint(
+            good.unionByName(bad), out, max_parallelism=128, parallelism=1,
+            state_ids={"good": 0},
+        )
+    assert os.listdir(out) == []

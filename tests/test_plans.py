@@ -947,3 +947,47 @@ def test_webdataset_roundtrip_is_shuffle_free_arrow(plans):
     assert "Join" not in p
     assert "BatchEvalPython" not in p
     assert p.lower().count("mapinpandas") == 1
+
+
+def test_scan_splits_plan_in_the_jvm(spark, tmp_path):
+    """The savepoint and checkpoint scans plan their splits as a JVM
+    Range with one task per split: no Python RDD (``ExistingRDD``) and no
+    round-robin exchange in front of the byte scan."""
+    from bravo_spark.codecs import flink as fc
+    from bravo_spark.sources import checkpoint as ck
+    from bravo_spark.sources import savepoint as sp
+    from bravo_spark.sources import sst
+    from bravo_spark.sources import staterows as sr
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    kv = spark.createDataFrame([(k, k) for k in range(64)], "key long, value long")
+    path = str(tmp_path / "sp")
+    sp.write_savepoint(
+        sr.kv_to_state_rows(kv, "Count", fc.LONG, fc.LONG), path,
+        max_parallelism=128, parallelism=2,
+    )
+    splits, *_ = sp._plan_scan(path, None, None, splits_per_file=3)
+    assert len(splits) == 6
+    for df in (
+        sp.read_savepoint(spark, path, splits_per_file=3),
+        sp.read_savepoint_kv(spark, path, "Count", fc.LONG, fc.LONG, splits_per_file=3),
+    ):
+        p = plan(df)
+        assert "RoundRobinPartitioning" not in p and "ExistingRDD" not in p
+        assert df.rdd.getNumPartitions() == len(splits)
+    assert sp.read_savepoint_kv(
+        spark, path, "Count", fc.LONG, fc.LONG, splits_per_file=3
+    ).count() == 64
+
+    d = str(tmp_path / "ckpt")
+    for seq in (1, 2, 3):
+        ck.write_sst_fixture(d, {"s": [(b"\x00k", seq, sst.TYPE_VALUE, b"v")]})
+    ssts = ck.discover_sst_files(d)
+    resolved = ck.read_incremental_checkpoint(spark, d)
+    p = plan(resolved)
+    assert "RoundRobinPartitioning" not in p and "ExistingRDD" not in p
+    # the scan's Range leaf: one split (task) per SST
+    assert f"splits={len(ssts)})" in p
+    assert resolved.count() == 1
